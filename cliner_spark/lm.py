@@ -161,59 +161,6 @@ def pair_counts(words: DataFrame) -> DataFrame:
     )
 
 
-def _apply_merge(syms: Column, a: str, b: str) -> Column:
-    """Greedy left-to-right merge of adjacent (a, b) -> a||b, as a pure
-    JVM left fold (aggregate) — one narrow map over the vocabulary, no
-    Python. The fold replicates BPE's leftmost-first semantics: a symbol
-    merges with the accumulator tail only if the tail element literally
-    equals `a` (a token just produced by this merge is 'a'||'b', which can
-    re-merge only when that concatenation equals `a` — same as the
-    sequential reference algorithm)."""
-    merged = F.lit(a + b)
-    return F.aggregate(
-        syms,
-        F.array().cast("array<string>"),
-        lambda acc, x: F.when(
-            (F.size(acc) > 0)
-            & (F.element_at(acc, -1) == F.lit(a))
-            & (x == F.lit(b)),
-            F.concat(F.slice(acc, 1, F.size(acc) - 1), F.array(merged)),
-        ).otherwise(F.concat(acc, F.array(x))),
-    )
-
-
-def bpe_merges(
-    words: DataFrame, k: int = 10
-) -> tuple[list[tuple[str, str, int]], DataFrame]:
-    """Learn k BPE merges from a (word, n) frequency table.
-
-    Each round: corpus-weighted adjacent-pair counts (one shuffle over the
-    vocabulary), deterministic argmax (max n, then lexicographic (a, b) —
-    a single driver-side row, the BPE loop control), then the merge applied
-    vocabulary-wide as a JVM fold. Returns (merges [(a, b, count)...],
-    final vocabulary DF with the segmented `syms` column). Stops early when
-    no pair repeats (max count < 2)."""
-    w = words.withColumn("syms", F.split(F.col("word"), "")).localCheckpoint(
-        eager=True
-    )
-    merges: list[tuple[str, str, int]] = []
-    for _ in range(k):
-        top = (
-            pair_counts(w)
-            .orderBy(F.desc("n"), F.asc("a"), F.asc("b"))
-            .limit(1)
-            .collect()
-        )
-        if not top or top[0]["n"] < 2:
-            break
-        a, b, n = top[0]["a"], top[0]["b"], int(top[0]["n"])
-        merges.append((a, b, n))
-        w = w.withColumn("syms", _apply_merge(F.col("syms"), a, b)).localCheckpoint(
-            eager=True
-        )
-    return merges, w
-
-
 def importance_weights(
     df: DataFrame,
     target: DataFrame,

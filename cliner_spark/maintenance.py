@@ -207,32 +207,6 @@ def cluster_rewrite(
     return {"files": n, "overlap_before": before, "overlap_after": after}
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    n_buckets: int = 32,
-    sort_cols: list[str] | None = None,
-) -> None:
-    """Persist a table hash-BUCKETED on `bucket_col` (saveAsTable — bucket
-    metadata lives in the catalog; the Iceberg equivalent is a bucket(N, col)
-    partition transform). Bucketing pre-pays the shuffle ONCE at write time:
-    any later equi-join or aggregation keyed on `bucket_col` between tables
-    with the same bucketing reads co-located buckets and runs with ZERO
-    Exchange in the physical plan — the difference between re-shuffling
-    100 TB per join and never shuffling it again. `sort_cols` additionally
-    orders rows inside each bucket file (turn-ordered transcripts read
-    sequentially).
-
-    Asserted in tests/test_plans.py: bucketed-bucketed join plan contains no
-    Exchange and matches the plain-join result exactly.
-    """
-    w = df.write.mode("overwrite").bucketBy(n_buckets, bucket_col)
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.format("parquet").saveAsTable(table)
-
-
 # ---------------------------------------------------------------------------
 # Multi-dimensional clustering: Morton (Z-order) interleave
 # ---------------------------------------------------------------------------

@@ -33,18 +33,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("media_type", T.StringType(), False),
-        T.StructField("meta", T.StructType([
-            T.StructField("n_bytes", T.LongType(), False),
-            T.StructField("sha256", T.StringType(), False),
-        ]), True),
-    ]
-)
-
 
 def attach_payload(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Build a media table from any text table: payload = utf-8 bytes (the

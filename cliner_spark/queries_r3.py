@@ -3,9 +3,7 @@
 Same contract as queries_r2: every @register pairs a Spark DataFrame plan
 with a DuckDB ANSI-SQL oracle twin over the driver's parquet tables, column
 names/types aligned on both sides. Imported by entry_queries AFTER all
-helpers exist; R3_NAMES (newest work, highest verification priority) feeds
-the front of entry_queries.DRIVER_PRIORITY so the driver's 50-row
-correctness window always covers the current round first.
+helpers exist; R3_NAMES lists this module's registrations.
 """
 
 from __future__ import annotations
@@ -32,83 +30,6 @@ def _register_r3(name: str, sql: str | None):
         return register(name, sql)(fn)
 
     return deco
-
-
-# --------------------------------------------------------------------------
-# Round 3a: pure-JVM window twin of the cogrouped-pandas as-of join
-# (r2 verdict item 6 — the last >10 s Python surface gets a demonstrably
-# cheaper whole-stage-codegen plan producing the identical result)
-# --------------------------------------------------------------------------
-
-# identical oracle to q_cogroup_asof: native DuckDB ASOF LEFT JOIN
-_ASOF_SQL = """
-WITH l AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
-r AS (SELECT user_id, ts, max(value) AS rv FROM events
-      WHERE event_type = 'purchase' GROUP BY 1, 2)
-SELECT l.event_id, l.user_id, l.ts, r.rv AS last_right_value,
-       epoch_ms(l.ts) - epoch_ms(r.ts) AS gap_ms
-FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND r.ts <= l.ts
-"""
-
-
-@_register_r3("q_asof_union_window", _ASOF_SQL)
-def q_asof_union_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Backward as-of join as a UNION + last_value window — the built-in
-    twin of q_cogroup_asof (same DuckDB ASOF JOIN oracle, byte-identical
-    result): tag left (clicks) and pre-aggregated right (purchases) rows,
-    sort within user by (ts, side) with right-before-left on ties so
-    r.ts <= l.ts is inclusive, and carry the last non-null right value /
-    timestamp forward with an ignorenulls last() over ROWS UNBOUNDED
-    PRECEDING. The whole plan is one shuffle on user_id and stays inside
-    WholeStageCodegen — no Python workers, no Arrow transfer — which is why
-    it beats the cogrouped-pandas formulation at any scale. Gap in whole
-    ms via integer unix_micros div (exactly DuckDB's epoch_ms floor; the
-    synthetic ts carries microsecond fractions so float ms would be
-    engine-dependent)."""
-    ev = load(spark, sf_dir, "events")
-    l = ev.filter(F.col("event_type") == "click").select(
-        "event_id",
-        "user_id",
-        "ts",
-        F.lit(None).cast("double").alias("rv"),
-        F.lit(None).cast("timestamp").alias("rts"),
-        F.lit(1).alias("is_left"),
-    )
-    r = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id", "ts")
-        .agg(F.max("value").alias("rv"))
-        .select(
-            F.lit(None).cast("long").alias("event_id"),
-            "user_id",
-            "ts",
-            "rv",
-            F.col("ts").alias("rts"),
-            F.lit(0).alias("is_left"),
-        )
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "is_left")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carried = (
-        l.unionByName(r)
-        .withColumn("last_right_value", F.last("rv", ignorenulls=True).over(w))
-        .withColumn("lrts", F.last("rts", ignorenulls=True).over(w))
-    )
-    # parquet ts is TIMESTAMP_NTZ; session tz is pinned UTC (session.py) so
-    # the cast reads the wall-clock as UTC — DuckDB's naive-epoch_ms algebra
-    ms = lambda c: F.expr(  # noqa: E731
-        f"unix_micros(cast({c} as timestamp)) div 1000"
-    )
-    return carried.filter(F.col("is_left") == 1).select(
-        "event_id",
-        "user_id",
-        "ts",
-        "last_right_value",
-        (ms("ts") - ms("lrts")).cast("bigint").alias("gap_ms"),
-    )
 
 
 # --------------------------------------------------------------------------
@@ -967,189 +888,15 @@ def q_isa_cycle_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------------------------------------
-# Round 3f: ANN index-health profile + embedding per-dimension stats
-# --------------------------------------------------------------------------
-
 from cliner_spark.entry_queries import SQL_EMB, SQL_SEEDED_TOPK  # noqa: E402
 
 # seeds/ssims/scells CTEs only (the quantizer), without the probe/rerank tail
 _SQL_SEEDED_CELLS = SQL_SEEDED_TOPK[: SQL_SEEDED_TOPK.index("sprobes")].rstrip().rstrip(",")
 
 
-@_register_r3(
-    "q_ivf_cell_profile",
-    f"""
-WITH {SQL_EMB}, {_SQL_SEEDED_CELLS},
-per AS (SELECT cell, CAST(count(*) AS BIGINT) AS n_vectors FROM scells GROUP BY cell),
-tot AS (SELECT CAST(sum(n_vectors) AS BIGINT) AS n FROM per)
-SELECT p.cell, p.n_vectors,
-       round(CAST(p.n_vectors AS DOUBLE) / t.n, 6) AS share
-FROM per p CROSS JOIN tot t
-""",
-)
-def q_ivf_cell_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN index-health profile: per-cell vector counts and corpus share
-    for the seeded IVF quantizer (similarity.seeded_cells — the exact
-    assignment ivf_seeded_topk searches). A skewed cell list is the
-    vector-search analog of a hot partition: probe latency is driven by the
-    LARGEST probed cell, so this profile is the gate that decides when the
-    index needs re-seeding (or more lists) — run it per index release, not
-    per query. One map-side-combined count over the assignment; the share
-    ratio is a 1-row broadcast carry."""
-    from cliner_spark import similarity as _s
-    from cliner_spark.session import ensure_parallelism
-
-    emb = ensure_parallelism(load(spark, sf_dir, "embeddings"))
-    _cent, assigned = _s.seeded_cells(emb, n_lists=16)
-    per = assigned.groupBy("cell").agg(F.count(F.lit(1)).alias("n_vectors"))
-    tot = per.agg(F.sum("n_vectors").alias("n"))
-    return per.crossJoin(F.broadcast(tot)).select(
-        "cell",
-        F.col("n_vectors").cast("bigint").alias("n_vectors"),
-        F.round(F.col("n_vectors").cast("double") / F.col("n"), 6).alias("share"),
-    )
-
-
-@_register_r3(
-    "q_embedding_dim_stats",
-    f"""
-WITH {SQL_EMB},
-flat AS (
-  SELECT CAST(t.i AS INTEGER) AS dim,
-         CAST(floor(e.v[t.i + 1] * 1000000) AS BIGINT) AS v_fp
-  FROM e, unnest(range(64)) AS t(i)
-)
-SELECT dim, CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(v_fp) AS BIGINT) AS sum_fp,
-       CAST(min(v_fp) AS BIGINT) AS min_fp,
-       CAST(max(v_fp) AS BIGINT) AS max_fp,
-       round(CAST(sum(v_fp) AS DOUBLE) / 1000000 / count(*), 6) AS mean
-FROM flat GROUP BY dim
-""",
-)
-def q_embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-dimension embedding distribution stats (the mean-centering /
-    whitening pre-pass every cosine-ANN pipeline should run — an off-center
-    dimension dominates dot products and collapses LSH buckets): exact
-    BIGINT fixed-point sums/min/max per dimension, one rounded mean.
-    posexplode is the 64x row expansion, but it feeds straight into a
-    partial-aggregated groupBy on 64 keys — the shuffle carries 64 rows per
-    partition, not the corpus. Fixed-point floor(v*1e6) keeps every
-    aggregate engine-exact (float32 -> double promotion is exact on both
-    sides)."""
-    from cliner_spark.session import ensure_parallelism
-
-    emb = ensure_parallelism(load(spark, sf_dir, "embeddings"))
-    flat = emb.select(
-        F.posexplode(F.col("embedding").cast("array<double>")).alias("dim", "v")
-    ).select(
-        F.col("dim").cast("int").alias("dim"),
-        F.floor(F.col("v") * 1000000).cast("bigint").alias("v_fp"),
-    )
-    return flat.groupBy("dim").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("v_fp").alias("sum_fp"),
-        F.min("v_fp").alias("min_fp"),
-        F.max("v_fp").alias("max_fp"),
-        F.round(F.sum("v_fp").cast("double") / 1000000 / F.count(F.lit(1)), 6).alias(
-            "mean"
-        ),
-    )
-
-
 # --------------------------------------------------------------------------
-# Round 3g: zone-map pruning audit, golden-record survivorship, KG path
-# explanations
+# Round 3g: golden-record survivorship, KG path explanations
 # --------------------------------------------------------------------------
-
-from cliner_spark.maintenance import morton_col, morton_sql  # noqa: E402
-
-_Z3 = morton_sql("l_partkey", "l_suppkey")
-# fixed audit predicate, valid at every SF (partkey/suppkey start at 1)
-_PRED_SQL = "l_partkey BETWEEN 10 AND 50 AND l_suppkey BETWEEN 1 AND 5"
-
-
-@_register_r3(
-    "q_zonemap_prune_audit",
-    f"""
-WITH z AS (SELECT l_partkey, l_suppkey, {_Z3} AS zval FROM lineitem),
-b AS (
-  SELECT zval >> 16 AS zbucket, count(*) AS n_rows,
-         min(l_partkey) AS min_p, max(l_partkey) AS max_p,
-         min(l_suppkey) AS min_s, max(l_suppkey) AS max_s,
-         sum(CASE WHEN {_PRED_SQL} THEN 1 ELSE 0 END) AS n_match
-  FROM z GROUP BY 1
-),
-s AS (
-  SELECT b.*, CASE WHEN min_p <= 50 AND max_p >= 10
-                    AND min_s <= 5 AND max_s >= 1 THEN 1 ELSE 0 END AS scanned
-  FROM b
-)
-SELECT CAST(count(*) AS BIGINT) AS n_buckets,
-       CAST(sum(scanned) AS BIGINT) AS n_scanned,
-       CAST(sum(n_rows) AS BIGINT) AS rows_total,
-       CAST(sum(CASE WHEN scanned = 1 THEN n_rows ELSE 0 END) AS BIGINT)
-         AS rows_scanned,
-       CAST(sum(n_match) AS BIGINT) AS rows_matched,
-       CASE WHEN sum(n_match) > 0
-            THEN round(CAST(sum(CASE WHEN scanned = 1 THEN n_rows ELSE 0 END)
-                            AS DOUBLE) / sum(n_match), 6) END AS read_amp
-FROM s
-""",
-)
-def q_zonemap_prune_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zone-map pruning EFFECTIVENESS audit for the Z-order layout
-    (q_zorder_layout's buckets): for a two-dimensional predicate, how many
-    z-buckets a min/max-stats planner would actually scan, how many rows
-    that touches, and the read amplification vs the true match count — the
-    number that decides whether a table REWRITE (zorder) pays for itself
-    before anyone runs it at 100 TB. Every quantity is integer-exact; the
-    single ratio is one rounded division (NULL when the predicate matches
-    nothing)."""
-    li = load(spark, sf_dir, "lineitem")
-    z = morton_col(F.col("l_partkey").cast("long"), F.col("l_suppkey").cast("long"))
-    pred = (
-        F.col("l_partkey").between(10, 50) & F.col("l_suppkey").between(1, 5)
-    )
-    b = (
-        li.select(
-            F.shiftright(z, 16).alias("zbucket"), "l_partkey", "l_suppkey",
-            pred.cast("long").alias("m"),
-        )
-        .groupBy("zbucket")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.min("l_partkey").alias("min_p"),
-            F.max("l_partkey").alias("max_p"),
-            F.min("l_suppkey").alias("min_s"),
-            F.max("l_suppkey").alias("max_s"),
-            F.sum("m").alias("n_match"),
-        )
-    )
-    scanned = (
-        (F.col("min_p") <= 50) & (F.col("max_p") >= 10)
-        & (F.col("min_s") <= 5) & (F.col("max_s") >= 1)
-    ).cast("long")
-    return b.select(b["*"], scanned.alias("scanned")).agg(
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.sum("scanned").alias("n_scanned"),
-        F.sum("n_rows").alias("rows_total"),
-        F.sum(F.when(F.col("scanned") == 1, F.col("n_rows")).otherwise(0)).alias(
-            "rows_scanned"
-        ),
-        F.sum("n_match").alias("rows_matched"),
-    ).select(
-        F.col("n_buckets").cast("bigint").alias("n_buckets"),
-        F.col("n_scanned").cast("bigint").alias("n_scanned"),
-        F.col("rows_total").cast("bigint").alias("rows_total"),
-        F.col("rows_scanned").cast("bigint").alias("rows_scanned"),
-        F.col("rows_matched").cast("bigint").alias("rows_matched"),
-        F.when(
-            F.col("rows_matched") > 0,
-            F.round(F.col("rows_scanned").cast("double") / F.col("rows_matched"), 6),
-        ).alias("read_amp"),
-    )
 
 
 @_register_r3(
@@ -4471,10 +4218,9 @@ def q_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round 3u (batch 18): privacy-preserving publication + warehouse integrity
-# — consistent entity pseudonymization over the materialized KG (with an
-# exact collision audit) and a cross-table orphan-FK audit (the first gate
-# a warehouse ingest runs). Exact end to end.
+# Round 3u (batch 18): privacy-preserving publication — consistent entity
+# pseudonymization over the materialized KG (with an exact collision
+# audit). Exact end to end.
 # --------------------------------------------------------------------------
 
 
@@ -4541,94 +4287,9 @@ def q_pseudonymize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register_r3(
-    "q_fk_integrity",
-    """
-SELECT 'lineitem.l_orderkey->orders' AS fk,
-       CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(count(*) FILTER (o.o_orderkey IS NULL) AS BIGINT) AS n_orphans,
-       CAST(count(DISTINCT CASE WHEN o.o_orderkey IS NULL
-            THEN l.l_orderkey END) AS BIGINT) AS n_orphan_keys
-FROM lineitem l LEFT JOIN orders o ON l.l_orderkey = o.o_orderkey
-UNION ALL
-SELECT 'orders.o_custkey->customer',
-       CAST(count(*) AS BIGINT),
-       CAST(count(*) FILTER (c.c_custkey IS NULL) AS BIGINT),
-       CAST(count(DISTINCT CASE WHEN c.c_custkey IS NULL
-            THEN o.o_custkey END) AS BIGINT)
-FROM orders o LEFT JOIN customer c ON o.o_custkey = c.c_custkey
-UNION ALL
-SELECT 'customer.c_nationkey->nation',
-       CAST(count(*) AS BIGINT),
-       CAST(count(*) FILTER (n.n_nationkey IS NULL) AS BIGINT),
-       CAST(count(DISTINCT CASE WHEN n.n_nationkey IS NULL
-            THEN c.c_nationkey END) AS BIGINT)
-FROM customer c LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey
-UNION ALL
-SELECT 'lineitem.l_partkey->part',
-       CAST(count(*) AS BIGINT),
-       CAST(count(*) FILTER (p.p_partkey IS NULL) AS BIGINT),
-       CAST(count(DISTINCT CASE WHEN p.p_partkey IS NULL
-            THEN l.l_partkey END) AS BIGINT)
-FROM lineitem l LEFT JOIN part p ON l.l_partkey = p.p_partkey
-UNION ALL
-SELECT 'lineitem.l_suppkey->supplier',
-       CAST(count(*) AS BIGINT),
-       CAST(count(*) FILTER (s.s_suppkey IS NULL) AS BIGINT),
-       CAST(count(DISTINCT CASE WHEN s.s_suppkey IS NULL
-            THEN l.l_suppkey END) AS BIGINT)
-FROM lineitem l LEFT JOIN supplier s ON l.l_suppkey = s.s_suppkey
-""",
-)
-def q_fk_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Referential-integrity audit across the warehouse star schema: for
-    each declared FK edge, total rows, orphan rows (FK value with no parent
-    key), and distinct orphan key values — the first gate an ingest runs
-    before any join-based query is trusted (an orphan rate > 0 silently
-    deflates every inner join downstream). All-integer output; a healthy
-    load shows n_orphans = 0 on every row, so the hash check doubles as a
-    fixture contract.
-
-    Scale plan: each audit is a left join against a DIMENSION (orders/
-    customer/nation/part/supplier keys) — broadcastable or bucket-co-
-    located; counts are map-side-combined. The fact table (lineitem) is
-    scanned once per declared FK; production fuses the two lineitem audits
-    into one scan with two broadcast probes, which Spark's AQE already
-    does here (both dimension sides broadcast)."""
-    li = load(spark, sf_dir, "lineitem")
-    od = load(spark, sf_dir, "orders")
-    cu = load(spark, sf_dir, "customer")
-    na = load(spark, sf_dir, "nation")
-    pa = load(spark, sf_dir, "part")
-    su = load(spark, sf_dir, "supplier")
-
-    def audit(fact, fk_col, dim, pk_col, label):
-        j = fact.select(F.col(fk_col)).join(
-            dim.select(F.col(pk_col)), fact[fk_col] == dim[pk_col], "left"
-        )
-        orphan = F.col(pk_col).isNull()
-        return j.agg(
-            F.lit(label).alias("fk"),
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            F.sum(orphan.cast("long")).cast("bigint").alias("n_orphans"),
-            F.countDistinct(F.when(orphan, F.col(fk_col)))
-            .cast("bigint")
-            .alias("n_orphan_keys"),
-        ).select("fk", "n_rows", "n_orphans", "n_orphan_keys")
-
-    return (
-        audit(li, "l_orderkey", od, "o_orderkey", "lineitem.l_orderkey->orders")
-        .unionAll(audit(od, "o_custkey", cu, "c_custkey", "orders.o_custkey->customer"))
-        .unionAll(audit(cu, "c_nationkey", na, "n_nationkey", "customer.c_nationkey->nation"))
-        .unionAll(audit(li, "l_partkey", pa, "p_partkey", "lineitem.l_partkey->part"))
-        .unionAll(audit(li, "l_suppkey", su, "s_suppkey", "lineitem.l_suppkey->supplier"))
-    )
-
-
 # --------------------------------------------------------------------------
-# Round 3v (batch 19): monitoring + forensic audits — exact-integer CUSUM
-# changepoint localization over the daily event series, and a Benford
-# first-digit audit over order totals. Zero float surface in either.
+# Round 3v (batch 19): monitoring audit — exact-integer CUSUM changepoint
+# localization over the daily event series. Zero float surface.
 # --------------------------------------------------------------------------
 
 
@@ -4716,50 +4377,6 @@ def q_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         "x",
         F.col("cusum_num").cast("bigint").alias("cusum_num"),
         (F.col("pr") == 1).alias("is_peak"),
-    )
-
-
-@_register_r3(
-    "q_benford_audit",
-    """
-WITH cents AS (
-  SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS c
-  FROM orders WHERE o_totalprice > 0
-),
-d AS (SELECT CAST(substr(CAST(c AS VARCHAR), 1, 1) AS INTEGER) AS digit FROM cents)
-SELECT digit,
-       CAST(count(*) AS BIGINT) AS n_orders,
-       CAST(sum(count(*)) OVER () AS BIGINT) AS n_total
-FROM d GROUP BY digit
-""",
-)
-def q_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benford first-significant-digit audit of order totals — the
-    classic forensic screen for fabricated or truncated monetary data
-    (organic multiplicative amounts follow P(d) = log10(1+1/d); a flat or
-    spiked digit histogram flags synthetic injection or a capped field).
-    The digit is extracted with integer/string algebra only (2-dp doubles
-    -> exact BIGINT cents -> leading char), so the histogram is engine-
-    exact; the consumer compares n_orders/n_total per digit against the
-    Benford curve with whatever test it prefers — the sufficient
-    statistics here are exact.
-
-    Scale plan: stateless per-row digit extraction + one 9-key groupBy;
-    the windowed total runs on the 9-row result. Nothing scales past the
-    single fact-table scan."""
-    od = load(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 0)
-    d = od.select(
-        F.substring(
-            F.round(F.col("o_totalprice") * 100).cast("bigint").cast("string"), 1, 1
-        )
-        .cast("int")
-        .alias("digit")
-    )
-    g = d.groupBy("digit").agg(F.count(F.lit(1)).cast("bigint").alias("n_orders"))
-    return g.select(
-        "digit",
-        "n_orders",
-        F.sum("n_orders").over(Window.partitionBy()).cast("bigint").alias("n_total"),
     )
 
 

@@ -1941,8 +1941,8 @@ def q_dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round 4m: distributed Borůvka spanning forest, survival/inequality/
-# agreement/richness ledgers, and record-linkage agreement patterns.
+# Round 4m: distributed Borůvka spanning forest and survival / inequality /
+# agreement / richness ledgers.
 # --------------------------------------------------------------------------
 
 _MSF_CAP = 600
@@ -2372,89 +2372,6 @@ def q_chao1_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("chao1"),
         (ntok - f1).cast("bigint").alias("coverage_num"),
         F.round((ntok - f1).cast("double") / ntok, 6).alias("good_coverage"),
-    )
-
-
-_FS_SQL = """
-WITH c AS (
-  SELECT c_custkey AS k, c_nationkey AS nat, c_mktsegment AS seg,
-         CAST(round(c_acctbal * 100) AS BIGINT) AS cents
-  FROM customer
-),
-p AS (
-  SELECT CASE WHEN a.seg = b.seg THEN 1 ELSE 0 END AS seg_agree,
-         CASE WHEN abs(a.cents - b.cents) <= 10000 THEN 1 ELSE 0 END
-           AS bal_agree,
-         CASE WHEN (a.cents < 0) = (b.cents < 0) THEN 1 ELSE 0 END
-           AS credit_agree
-  FROM c a JOIN c b ON a.nat = b.nat AND a.k < b.k
-)
-SELECT CAST(seg_agree AS INT) AS seg_agree,
-       CAST(bal_agree AS INT) AS bal_agree,
-       CAST(credit_agree AS INT) AS credit_agree,
-       CAST(count(*) AS BIGINT) AS n_pairs,
-       CAST(sum(count(*)) OVER () AS BIGINT) AS total_pairs,
-       round(CAST(count(*) AS DOUBLE) / sum(count(*)) OVER (), 6) AS u_prob
-FROM p GROUP BY 1, 2, 3
-"""
-
-
-@_register_r4("q_fs_linkage", _FS_SQL)
-def q_fs_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fellegi-Sunter (1969) record-linkage agreement-pattern sufficient
-    statistics: within-block candidate pairs (blocked on nationkey — the
-    standard blocking step that makes probabilistic linkage tractable)
-    compared field-by-field into a 3-bit agreement vector (market segment
-    equality, balance within $100 as exact integer cents, credit-status
-    sign), then the pattern frequency table with exact u-probability
-    rationals (n_pairs over the windowed total). These frequencies are the
-    E-step input of the FS expectation-maximization fit; the m-side needs
-    labeled duplicates, which the synthetic corpus deliberately lacks —
-    the docstring contract is the pattern ledger, not the EM fixpoint.
-    The entity-resolution complement to the canonicalize/pseudonymize
-    family: it quantifies how discriminating each field is BEFORE anyone
-    trusts it as a match key.
-
-    Scale plan: blocking keeps the pair join an equi-join on nat (never
-    all-pairs across blocks); the k< predicate halves it; output is a
-    <=8-row pattern grid, so the OVER () total is an 8-row window. Exact
-    cents via round(x*100) — the Benford-audit trick."""
-    c = load(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("k"),
-        F.col("c_nationkey").alias("nat"),
-        F.col("c_mktsegment").alias("seg"),
-        F.round(F.col("c_acctbal") * 100).cast("bigint").alias("cents"),
-    )
-    a, b = c.alias("a"), c.alias("b")
-    p = a.join(
-        b,
-        (F.col("a.nat") == F.col("b.nat")) & (F.col("a.k") < F.col("b.k")),
-    ).select(
-        F.when(F.col("a.seg") == F.col("b.seg"), 1).otherwise(0).alias(
-            "seg_agree"
-        ),
-        F.when(
-            F.abs(F.col("a.cents") - F.col("b.cents")) <= 10000, 1
-        )
-        .otherwise(0)
-        .alias("bal_agree"),
-        F.when(
-            (F.col("a.cents") < 0) == (F.col("b.cents") < 0), 1
-        )
-        .otherwise(0)
-        .alias("credit_agree"),
-    )
-    g = p.groupBy("seg_agree", "bal_agree", "credit_agree").agg(
-        F.count(F.lit(1)).alias("n_pairs")
-    )
-    tot = F.sum("n_pairs").over(Window.partitionBy())
-    return g.select(
-        F.col("seg_agree").cast("int").alias("seg_agree"),
-        F.col("bal_agree").cast("int").alias("bal_agree"),
-        F.col("credit_agree").cast("int").alias("credit_agree"),
-        F.col("n_pairs").cast("bigint").alias("n_pairs"),
-        tot.cast("bigint").alias("total_pairs"),
-        F.round(F.col("n_pairs").cast("double") / tot, 6).alias("u_prob"),
     )
 
 
@@ -4602,9 +4519,7 @@ def q_watermark_lateness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round 4s: distribution distance + shuffle-skew forensics — exact
-# Wasserstein-1 between source length distributions, and a join-key skew
-# audit that recommends salting factors.
+# Round 4s: exact Wasserstein-1 between source length distributions.
 # --------------------------------------------------------------------------
 
 _W1_SQL = """
@@ -4720,79 +4635,6 @@ def q_wasserstein_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(
             F.max("gap").cast("double") / (F.max("na") * F.max("nb")), 6
         ).alias("ks"),
-    )
-
-
-_SKEW_SQL = """
-WITH k1 AS (
-  SELECT 'lineitem.l_orderkey' AS join_key, l_orderkey AS k FROM lineitem
-),
-k2 AS (SELECT 'orders.o_custkey', o_custkey FROM orders),
-k3 AS (SELECT 'events.user_id', user_id FROM events),
-ks AS (SELECT * FROM k1 UNION ALL SELECT * FROM k2 UNION ALL SELECT * FROM k3),
-c AS (
-  SELECT join_key, k, CAST(count(*) AS BIGINT) AS n
-  FROM ks GROUP BY 1, 2
-)
-SELECT join_key,
-       CAST(count(*) AS BIGINT) AS n_keys,
-       CAST(sum(n) AS BIGINT) AS n_rows,
-       CAST(max(n) AS BIGINT) AS max_key_rows,
-       CAST(max(n) * count(*) AS BIGINT) AS skew_num,
-       CAST(sum(n) AS BIGINT) AS skew_den,
-       round(CAST(max(n) * count(*) AS DOUBLE) / sum(n), 6) AS skew_ratio,
-       CAST(CASE WHEN max(n) * count(*) <= 4 * sum(n) THEN 1
-                 ELSE (max(n) * count(*) + 4 * sum(n) - 1)
-                      // (4 * sum(n)) END AS BIGINT) AS rec_salt
-FROM c GROUP BY 1
-"""
-
-
-@_register_r4("q_skew_audit", _SKEW_SQL)
-def q_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join-key skew audit over the three hottest shuffle keys in the
-    schema (lineitem->orders, orders->customer, events per user): per key
-    the exact cardinality/row counts, the skew ratio max_key_rows /
-    mean_key_rows as the cross-multiplied rational max·n_keys / n_rows,
-    and the SALTING FACTOR a shuffle planner would apply — ceil(skew_ratio
-    / 4) with tolerance 4x-mean, computed in exact integer ceiling
-    division. This is the table that decides, BEFORE the job runs, which
-    joins get salted/AQE-skew-split at 100 TB; the whole mechanism the
-    triple sink's salted_partition_col implements is sized by exactly
-    this number.
-
-    Scale plan: three map-side-combined per-key counts unioned, one
-    |keys|-frame rollup per audit row. No joins at all — the audit of
-    joins costs less than any join it tunes."""
-    li = load(spark, sf_dir, "lineitem").select(
-        F.lit("lineitem.l_orderkey").alias("join_key"),
-        F.col("l_orderkey").alias("k"),
-    )
-    od = load(spark, sf_dir, "orders").select(
-        F.lit("orders.o_custkey").alias("join_key"),
-        F.col("o_custkey").alias("k"),
-    )
-    ev = load(spark, sf_dir, "events").select(
-        F.lit("events.user_id").alias("join_key"), F.col("user_id").alias("k")
-    )
-    c = (
-        li.unionAll(od)
-        .unionAll(ev)
-        .groupBy("join_key", "k")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    )
-    nk, nr, mx = F.count(F.lit(1)), F.sum("n"), F.max("n")
-    rec = F.when(mx * nk <= 4 * nr, F.lit(1)).otherwise(
-        F.floor((mx * nk + 4 * nr - 1) / (4 * nr))
-    )
-    return c.groupBy("join_key").agg(
-        nk.cast("bigint").alias("n_keys"),
-        nr.cast("bigint").alias("n_rows"),
-        mx.cast("bigint").alias("max_key_rows"),
-        (mx * nk).cast("bigint").alias("skew_num"),
-        nr.cast("bigint").alias("skew_den"),
-        F.round((mx * nk).cast("double") / nr, 6).alias("skew_ratio"),
-        rec.cast("bigint").alias("rec_salt"),
     )
 
 
@@ -4966,7 +4808,7 @@ def q_degree_ccdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     read on log-log axes this is THE heavy-tail diagnostic (a straight
     CCDF = power-law boilerplate contamination; at 100 TB a fat tail
     here predicts hot keys in every downstream pair join, which is what
-    q_skew_audit then sizes). Exact integers except the rounded ccdf.
+    a join-skew audit then sizes). Exact integers except the rounded ccdf.
 
     Scale plan: degree = one map-side-combined count over edge
     endpoints; the spectrum windows run on the |distinct degrees| frame.
@@ -7227,390 +7069,6 @@ def q_suffix_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round 4v: causal inference / experimentation trio over the event log —
-# stratified average treatment effect with positivity guards, 2x2
-# difference-in-differences, and CUPED variance reduction (Deng et al.
-# WSDM 2013). Treatment is an md5 user-bucket bit (the standard hash-based
-# assignment every experimentation platform uses), outcome is exact
-# purchase cents, strata come from the customer dimension. All effects
-# ship as cross-multiplied BIGINT rationals; floats only as round(.,6)
-# convenience columns derived from those integers.
-# --------------------------------------------------------------------------
-
-_CAUSAL_USERS_SQL = """
-users AS (
-  SELECT DISTINCT e.user_id, c.c_mktsegment AS seg,
-         (strpos('0123456789abcdef',
-                 substr(md5('trt:' || e.user_id::VARCHAR), 1, 1)) - 1) % 2
-           AS trt
-  FROM events e JOIN customer c ON c.c_custkey = e.user_id
-)"""
-
-_STRAT_ATE_SQL = f"""
-WITH {_CAUSAL_USERS_SQL.strip()},
-y AS (
-  SELECT user_id,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
-  FROM events WHERE event_type = 'purchase' GROUP BY 1
-),
-cells AS (
-  SELECT u.seg,
-         CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(u.trt) AS BIGINT) AS n_treat,
-         CAST(count(*) - sum(u.trt) AS BIGINT) AS n_ctrl,
-         CAST(sum(CASE WHEN u.trt = 1 THEN coalesce(y.cents, 0) ELSE 0 END)
-              AS BIGINT) AS y1_cents,
-         CAST(sum(CASE WHEN u.trt = 0 THEN coalesce(y.cents, 0) ELSE 0 END)
-              AS BIGINT) AS y0_cents
-  FROM users u LEFT JOIN y ON y.user_id = u.user_id
-  GROUP BY u.seg
-)
-SELECT seg, n, n_treat, n_ctrl, y1_cents, y0_cents,
-       CASE WHEN n_treat > 0 AND n_ctrl > 0
-            THEN y1_cents * n_ctrl - y0_cents * n_treat END AS eff_num,
-       CASE WHEN n_treat > 0 AND n_ctrl > 0
-            THEN n_treat * n_ctrl END AS eff_den,
-       CASE WHEN n_treat > 0 AND n_ctrl > 0
-            THEN n * (y1_cents * n_ctrl - y0_cents * n_treat) END
-         AS w_eff_num,
-       round(CAST(CASE WHEN n_treat > 0 AND n_ctrl > 0
-                  THEN y1_cents * n_ctrl - y0_cents * n_treat END AS DOUBLE)
-             / (n_treat * n_ctrl), 6) AS avg_effect_cents
-FROM cells
-"""
-
-
-@_register_r4("q_stratified_ate", _STRAT_ATE_SQL)
-def q_stratified_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stratified average treatment effect of an md5 user-bucket treatment
-    on lifetime purchase cents, one row per market-segment stratum. Within
-    a stratum the hash assignment is unconfounded, so the per-stratum
-    effect is the plain arm-mean difference, carried as the exact rational
-    (eff_num, eff_den) = (y1*n_ctrl - y0*n_treat, n_treat*n_ctrl);
-    w_eff_num = n * eff_num lets downstream assemble the population ATE
-    sum_s n_s/N * eff_s without re-scanning. Strata violating positivity
-    (an empty arm) emit NULL effects instead of dividing by zero — the
-    guard every real experimentation pipeline needs.
-
-    Scale plan: one dimension-side broadcast join (customer), one
-    purchase aggregation keyed by user, one segment-keyed agg — map-side
-    combine everywhere, output is dimension-sized (#segments)."""
-    ev = load(spark, sf_dir, "events")
-    cust = load(spark, sf_dir, "customer")
-    trt = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("trt:"), F.col("user_id").cast("string"))),
-                1,
-                1,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 2
-    )
-    users = (
-        ev.select("user_id")
-        .distinct()
-        .join(
-            F.broadcast(cust.select("c_custkey", "c_mktsegment")),
-            F.col("user_id") == F.col("c_custkey"),
-        )
-        .select("user_id", F.col("c_mktsegment").alias("seg"), trt.alias("trt"))
-    )
-    y = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id")
-        .agg(
-            F.sum(F.round(F.col("value") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
-    cells = (
-        users.join(y.withColumnRenamed("user_id", "y_user"),
-                   F.col("user_id") == F.col("y_user"), "left")
-        .groupBy("seg")
-        .agg(
-            F.count("*").cast("bigint").alias("n"),
-            F.sum("trt").cast("bigint").alias("n_treat"),
-            (F.count("*") - F.sum("trt")).cast("bigint").alias("n_ctrl"),
-            F.sum(
-                F.when(F.col("trt") == 1, F.coalesce(F.col("cents"), F.lit(0)))
-                .otherwise(0)
-            ).cast("bigint").alias("y1_cents"),
-            F.sum(
-                F.when(F.col("trt") == 0, F.coalesce(F.col("cents"), F.lit(0)))
-                .otherwise(0)
-            ).cast("bigint").alias("y0_cents"),
-        )
-    )
-    pos = (F.col("n_treat") > 0) & (F.col("n_ctrl") > 0)
-    eff_num = F.col("y1_cents") * F.col("n_ctrl") - F.col("y0_cents") * F.col("n_treat")
-    return cells.select(
-        "seg", "n", "n_treat", "n_ctrl", "y1_cents", "y0_cents",
-        F.when(pos, eff_num).alias("eff_num"),
-        F.when(pos, F.col("n_treat") * F.col("n_ctrl")).alias("eff_den"),
-        F.when(pos, F.col("n") * eff_num).alias("w_eff_num"),
-        F.round(
-            F.when(pos, eff_num).cast("double")
-            / (F.col("n_treat") * F.col("n_ctrl")),
-            6,
-        ).alias("avg_effect_cents"),
-    )
-
-
-_DID_SQL = f"""
-WITH {_CAUSAL_USERS_SQL.strip()},
-py AS (
-  SELECT user_id,
-         CASE WHEN day(ts) >= 16 THEN 1 ELSE 0 END AS post,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
-  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2
-),
-spine AS (
-  SELECT u.user_id, u.trt, p.post FROM users u
-  CROSS JOIN (VALUES (0), (1)) p(post)
-),
-cells AS (
-  SELECT s.trt, s.post,
-         CAST(count(*) AS BIGINT) AS n_users,
-         CAST(sum(coalesce(py.cents, 0)) AS BIGINT) AS sum_cents
-  FROM spine s LEFT JOIN py
-    ON py.user_id = s.user_id AND py.post = s.post
-  GROUP BY s.trt, s.post
-),
-w AS (
-  SELECT trt, post, n_users, sum_cents,
-         max(CASE WHEN trt = 1 AND post = 1 THEN sum_cents END) OVER () AS s11,
-         max(CASE WHEN trt = 1 AND post = 0 THEN sum_cents END) OVER () AS s10,
-         max(CASE WHEN trt = 0 AND post = 1 THEN sum_cents END) OVER () AS s01,
-         max(CASE WHEN trt = 0 AND post = 0 THEN sum_cents END) OVER () AS s00,
-         max(CASE WHEN trt = 1 THEN n_users END) OVER () AS nt,
-         max(CASE WHEN trt = 0 THEN n_users END) OVER () AS nc
-  FROM cells
-)
-SELECT CAST(trt AS BIGINT) AS trt, CAST(post AS BIGINT) AS post,
-       n_users, sum_cents,
-       round(CAST(sum_cents AS DOUBLE) / n_users, 6) AS mean_cents,
-       CAST((s11 - s10) * nc - (s01 - s00) * nt AS BIGINT) AS did_num,
-       CAST(nt * nc AS BIGINT) AS did_den,
-       round(CAST((s11 - s10) * nc - (s01 - s00) * nt AS DOUBLE)
-             / (nt * nc), 6) AS did_cents
-FROM w
-"""
-
-
-@_register_r4("q_did_estimator", _DID_SQL)
-def q_did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """2x2 difference-in-differences: unit = user, periods split at
-    day-of-month 16 (wall-clock component, engine-stable per
-    [[engine-exactness-discipline]]), outcome = per-user per-period
-    purchase cents zero-filled over the full user x {pre,post} spine (a
-    user with no purchases in a period contributes 0, not a dropped row —
-    dropping them biases the panel). Emits the 4 cell rows plus the DiD
-    estimate as one exact rational replicated across the frame:
-    did_num/did_den = (S11-S10)/nt - (S01-S00)/nc cross-multiplied, the
-    parallel-trends counterfactual estimate of the treatment effect.
-
-    Scale plan: the 2-row period spine is a literal cross join (no
-    shuffle); cells collapse map-side to 4 rows; the window runs over the
-    4-row frame only. At petabyte logs this is one scan + one 4-row
-    window."""
-    ev = load(spark, sf_dir, "events")
-    cust = load(spark, sf_dir, "customer")
-    trt = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("trt:"), F.col("user_id").cast("string"))),
-                1,
-                1,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 2
-    )
-    users = (
-        ev.select("user_id")
-        .distinct()
-        .join(
-            F.broadcast(cust.select("c_custkey")),
-            F.col("user_id") == F.col("c_custkey"),
-        )
-        .select("user_id", trt.alias("trt"))
-    )
-    py = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy(
-            F.col("user_id").alias("p_user"),
-            F.when(F.dayofmonth("ts") >= 16, 1).otherwise(0).alias("p_post"),
-        )
-        .agg(
-            F.sum(F.round(F.col("value") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
-    periods = spark.createDataFrame([(0,), (1,)], "post int")
-    spine = users.crossJoin(F.broadcast(periods))
-    cells = (
-        spine.join(
-            py,
-            (F.col("user_id") == F.col("p_user"))
-            & (F.col("post") == F.col("p_post")),
-            "left",
-        )
-        .groupBy("trt", "post")
-        .agg(
-            F.count("*").cast("bigint").alias("n_users"),
-            F.sum(F.coalesce(F.col("cents"), F.lit(0)))
-            .cast("bigint")
-            .alias("sum_cents"),
-        )
-    )
-    w = Window.partitionBy()  # 4-row frame
-    pick = lambda cond: F.max(F.when(cond, F.col("sum_cents"))).over(w)  # noqa: E731
-    s11 = pick((F.col("trt") == 1) & (F.col("post") == 1))
-    s10 = pick((F.col("trt") == 1) & (F.col("post") == 0))
-    s01 = pick((F.col("trt") == 0) & (F.col("post") == 1))
-    s00 = pick((F.col("trt") == 0) & (F.col("post") == 0))
-    nt = F.max(F.when(F.col("trt") == 1, F.col("n_users"))).over(w)
-    nc = F.max(F.when(F.col("trt") == 0, F.col("n_users"))).over(w)
-    did_num = (s11 - s10) * nc - (s01 - s00) * nt
-    return cells.select(
-        F.col("trt").cast("bigint").alias("trt"),
-        F.col("post").cast("bigint").alias("post"),
-        "n_users",
-        "sum_cents",
-        F.round(F.col("sum_cents").cast("double") / F.col("n_users"), 6).alias(
-            "mean_cents"
-        ),
-        did_num.cast("bigint").alias("did_num"),
-        (nt * nc).cast("bigint").alias("did_den"),
-        F.round(did_num.cast("double") / (nt * nc), 6).alias("did_cents"),
-    )
-
-
-_CUPED_SQL = f"""
-WITH {_CAUSAL_USERS_SQL.strip()},
-py AS (
-  SELECT user_id,
-         CASE WHEN day(ts) >= 16 THEN 1 ELSE 0 END AS post,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
-  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2
-),
-xy AS (
-  SELECT u.seg, u.user_id,
-         coalesce(max(CASE WHEN py.post = 0 THEN py.cents END), 0) AS x,
-         coalesce(max(CASE WHEN py.post = 1 THEN py.cents END), 0) AS y
-  FROM users u LEFT JOIN py ON py.user_id = u.user_id
-  GROUP BY u.seg, u.user_id
-),
-s AS (
-  SELECT seg, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-         CAST(sum(x * x) AS BIGINT) AS sxx,
-         CAST(sum(x * y) AS BIGINT) AS sxy,
-         CAST(sum(y * y) AS BIGINT) AS syy
-  FROM xy GROUP BY seg
-)
-SELECT seg, n, sx, sy, sxx, sxy, syy,
-       CAST(n * sxy - sx * sy AS BIGINT) AS theta_num,
-       CAST(n * sxx - sx * sx AS BIGINT) AS theta_den,
-       CAST(n * syy - sy * sy AS BIGINT) AS vary_num,
-       round(CAST(n * sxy - sx * sy AS DOUBLE)
-             / CAST(n * sxx - sx * sx AS DOUBLE), 6) AS theta,
-       CASE WHEN n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0 THEN
-         round((CAST(n * sxy - sx * sy AS DOUBLE)
-                * CAST(n * sxy - sx * sy AS DOUBLE))
-               / (CAST(n * sxx - sx * sx AS DOUBLE)
-                  * CAST(n * syy - sy * sy AS DOUBLE)), 6) END AS rho2
-FROM s
-"""
-
-
-@_register_r4("q_cuped_adjustment", _CUPED_SQL)
-def q_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUPED variance reduction (Deng et al. WSDM 2013): per segment, the
-    pre-period purchase cents X is the control covariate for the
-    post-period metric Y; theta = cov(X,Y)/var(X) ships as the exact
-    integer rational (n*sxy - sx*sy) / (n*sxx - sx^2) and the achievable
-    variance-reduction fraction rho^2 = theta_num^2 / (theta_den *
-    vary_num) — the number that tells an experimenter how much smaller
-    their confidence intervals get for free. Degenerate segments (zero
-    pre- or post-variance) emit NULL rho2 rather than a division blow-up.
-    All six sufficient statistics (n, sx, sy, sxx, sxy, syy) ship in the
-    row so downstream can pool segments without re-scanning.
-
-    Scale plan: one purchase scan -> (user, period) partial agg ->
-    per-user pivot -> segment agg, all map-side-combinable; output is
-    dimension-sized. The convenience doubles derive from the same BIGINTs
-    via the same expression tree on both engines (IEEE-identical)."""
-    ev = load(spark, sf_dir, "events")
-    cust = load(spark, sf_dir, "customer")
-    trt_users = (
-        ev.select("user_id")
-        .distinct()
-        .join(
-            F.broadcast(cust.select("c_custkey", "c_mktsegment")),
-            F.col("user_id") == F.col("c_custkey"),
-        )
-        .select("user_id", F.col("c_mktsegment").alias("seg"))
-    )
-    py = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy(
-            F.col("user_id").alias("p_user"),
-            F.when(F.dayofmonth("ts") >= 16, 1).otherwise(0).alias("p_post"),
-        )
-        .agg(
-            F.sum(F.round(F.col("value") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
-    xy = (
-        trt_users.join(py, F.col("user_id") == F.col("p_user"), "left")
-        .groupBy("seg", "user_id")
-        .agg(
-            F.coalesce(
-                F.max(F.when(F.col("p_post") == 0, F.col("cents"))), F.lit(0)
-            ).alias("x"),
-            F.coalesce(
-                F.max(F.when(F.col("p_post") == 1, F.col("cents"))), F.lit(0)
-            ).alias("y"),
-        )
-    )
-    s = xy.groupBy("seg").agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.sum("x").cast("bigint").alias("sx"),
-        F.sum("y").cast("bigint").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).cast("bigint").alias("sxx"),
-        F.sum(F.col("x") * F.col("y")).cast("bigint").alias("sxy"),
-        F.sum(F.col("y") * F.col("y")).cast("bigint").alias("syy"),
-    )
-    tn = F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
-    td = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    vn = F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")
-    return s.select(
-        "seg", "n", "sx", "sy", "sxx", "sxy", "syy",
-        tn.cast("bigint").alias("theta_num"),
-        td.cast("bigint").alias("theta_den"),
-        vn.cast("bigint").alias("vary_num"),
-        F.round(tn.cast("double") / td.cast("double"), 6).alias("theta"),
-        F.when(
-            (td > 0) & (vn > 0),
-            F.round(
-                (tn.cast("double") * tn.cast("double"))
-                / (td.cast("double") * vn.cast("double")),
-                6,
-            ),
-        ).alias("rho2"),
-    )
-
-
-# --------------------------------------------------------------------------
 # Round 4w: suffix-array clients — per-doc repeated-window extent profile,
 # tandem (periodic) repeat detection, and the LCP array of SA-adjacent
 # suffixes computed greedily from the doubling rank tables (the Kasai-free
@@ -9773,144 +9231,10 @@ def q_bellman_ford_hubs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round 4ac: analysis-governance trio — Simpson's-paradox detector over the
-# stratified treatment table (sign reversal between aggregate and strata,
-# all cross-multiplied), trimmed/winsorized means (the robust location
-# estimates between mean and median), and the Wald-Wolfowitz runs test of
-# serial randomness over daily event volumes.
+# Round 4ac: analysis-governance pair — trimmed/winsorized means (the
+# robust location estimates between mean and median) and the
+# Wald-Wolfowitz runs test of serial randomness over daily event volumes.
 # --------------------------------------------------------------------------
-
-_SIMPSON_SQL = f"""
-WITH {_CAUSAL_USERS_SQL.strip()},
-conv AS (
-  SELECT user_id, CAST(1 AS BIGINT) AS pos
-  FROM events
-  WHERE event_type = 'purchase' AND round(value * 100) >= 15000
-  GROUP BY user_id
-),
-cells AS (
-  SELECT u.seg,
-         CAST(sum(u.trt) AS BIGINT) AS t_n,
-         CAST(count(*) - sum(u.trt) AS BIGINT) AS c_n,
-         CAST(sum(CASE WHEN u.trt = 1 THEN coalesce(c.pos, 0) ELSE 0 END)
-              AS BIGINT) AS t_pos,
-         CAST(sum(CASE WHEN u.trt = 0 THEN coalesce(c.pos, 0) ELSE 0 END)
-              AS BIGINT) AS c_pos
-  FROM users u LEFT JOIN conv c ON c.user_id = u.user_id
-  GROUP BY u.seg
-),
-s AS (
-  SELECT seg, t_n, c_n, t_pos, c_pos,
-         CAST(sign(t_pos * c_n - c_pos * t_n) AS BIGINT) AS stratum_sign,
-         CAST(sum(t_pos) OVER () AS BIGINT) AS agg_t_pos,
-         CAST(sum(c_pos) OVER () AS BIGINT) AS agg_c_pos,
-         CAST(sum(t_n) OVER () AS BIGINT) AS agg_t_n,
-         CAST(sum(c_n) OVER () AS BIGINT) AS agg_c_n
-  FROM cells
-)
-SELECT seg, t_n, c_n, t_pos, c_pos, stratum_sign,
-       agg_t_pos, agg_c_pos, agg_t_n, agg_c_n,
-       CAST(sign(agg_t_pos * agg_c_n - agg_c_pos * agg_t_n) AS BIGINT)
-         AS agg_sign,
-       (sign(agg_t_pos * agg_c_n - agg_c_pos * agg_t_n) <> 0
-        AND max(CASE WHEN stratum_sign <> 0 THEN
-                  stratum_sign * sign(agg_t_pos * agg_c_n - agg_c_pos * agg_t_n)
-                END) OVER () = -1
-        AND min(CASE WHEN stratum_sign <> 0 THEN
-                  stratum_sign * sign(agg_t_pos * agg_c_n - agg_c_pos * agg_t_n)
-                END) OVER () = -1) AS simpson_flag
-FROM s
-"""
-
-
-@_register_r4("q_simpson_paradox", _SIMPSON_SQL)
-def q_simpson_paradox(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Simpson's-paradox detector over the stratified conversion table
-    (md5 treatment, conversion = any purchase >= $150, market-segment
-    strata): every association sign is the cross-multiplied
-    sign(t_pos*c_n - c_pos*t_n) — never a float rate — and simpson_flag
-    fires iff the aggregate association is nonzero while EVERY stratum
-    with a nonzero sign points the OPPOSITE way (the full reversal that
-    makes pooled dashboards lie; window min=max=-1 over the products).
-    Per-stratum cells and the aggregate carries ship in-row so the
-    reversal is auditable, not just flagged.
-
-    Scale plan: one user-keyed conversion rollup, one segment agg; the
-    sign algebra runs on the segment-dimension frame."""
-    ev = load(spark, sf_dir, "events")
-    cust = load(spark, sf_dir, "customer")
-    trt = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("trt:"), F.col("user_id").cast("string"))), 1, 1
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 2
-    )
-    users = (
-        ev.select("user_id").distinct()
-        .join(
-            F.broadcast(cust.select("c_custkey", "c_mktsegment")),
-            F.col("user_id") == F.col("c_custkey"),
-        )
-        .select("user_id", F.col("c_mktsegment").alias("seg"), trt.alias("trt"))
-    )
-    conv = (
-        ev.filter(
-            (F.col("event_type") == "purchase")
-            & (F.round(F.col("value") * 100) >= 15000)
-        )
-        .groupBy(F.col("user_id").alias("cu"))
-        .agg(F.lit(1).cast("bigint").alias("pos"))
-    )
-    cells = (
-        users.join(conv, F.col("cu") == F.col("user_id"), "left")
-        .groupBy("seg")
-        .agg(
-            F.sum("trt").cast("bigint").alias("t_n"),
-            (F.count("*") - F.sum("trt")).cast("bigint").alias("c_n"),
-            F.sum(F.when(F.col("trt") == 1, F.coalesce(F.col("pos"), F.lit(0))).otherwise(0))
-            .cast("bigint")
-            .alias("t_pos"),
-            F.sum(F.when(F.col("trt") == 0, F.coalesce(F.col("pos"), F.lit(0))).otherwise(0))
-            .cast("bigint")
-            .alias("c_pos"),
-        )
-    )
-    w = Window.partitionBy()  # segment frame
-    s = cells.select(
-        "*",
-        F.signum(
-            (F.col("t_pos") * F.col("c_n") - F.col("c_pos") * F.col("t_n")).cast("double")
-        )
-        .cast("bigint")
-        .alias("stratum_sign"),
-        F.sum("t_pos").over(w).cast("bigint").alias("agg_t_pos"),
-        F.sum("c_pos").over(w).cast("bigint").alias("agg_c_pos"),
-        F.sum("t_n").over(w).cast("bigint").alias("agg_t_n"),
-        F.sum("c_n").over(w).cast("bigint").alias("agg_c_n"),
-    )
-    agg_sign = F.signum(
-        (
-            F.col("agg_t_pos") * F.col("agg_c_n")
-            - F.col("agg_c_pos") * F.col("agg_t_n")
-        ).cast("double")
-    ).cast("bigint")
-    prod = F.when(
-        F.col("stratum_sign") != 0, F.col("stratum_sign") * agg_sign
-    )
-    return s.select(
-        "seg", "t_n", "c_n", "t_pos", "c_pos", "stratum_sign",
-        "agg_t_pos", "agg_c_pos", "agg_t_n", "agg_c_n",
-        agg_sign.alias("agg_sign"),
-        (
-            (agg_sign != 0)
-            & (F.max(prod).over(w) == -1)
-            & (F.min(prod).over(w) == -1)
-        ).alias("simpson_flag"),
-    )
 
 
 _TRIM_SQL = """
@@ -10728,101 +10052,12 @@ def q_kmeans_inertia(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round 4af: allocation + privacy + segmentation — k-anonymity / l-diversity
-# audit of the customer quasi-identifiers, depth-2 binary changepoint
+# Round 4af: segmentation + allocation — depth-2 binary changepoint
 # segmentation (recursing the round-3 CUSUM localization once), and
 # 6-round batch Gale-Shapley deferred acceptance routing docs to source
 # reviewers under capacity (McVitie-Wilson parallel proposals — the
 # task-to-annotator assignment primitive).
 # --------------------------------------------------------------------------
-
-_KANON_SQL = """
-WITH q AS (
-  SELECT c_mktsegment AS seg, c_nationkey AS nat,
-         CAST(c_acctbal >= 0 AS INT) AS sens
-  FROM customer
-),
-grp AS (
-  SELECT seg, nat, CAST(count(*) AS BIGINT) AS n,
-         CAST(count(DISTINCT sens) AS BIGINT) AS l_div
-  FROM q GROUP BY 1, 2
-),
-tot AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_rows,
-         CAST(count(DISTINCT seg || '|' || nat::VARCHAR) AS BIGINT)
-           AS n_groups,
-         CAST(min(0) AS BIGINT) AS zero
-  FROM q
-),
-lmin AS (SELECT CAST(min(l_div) AS BIGINT) AS min_l FROM grp)
-SELECT CAST(k.k AS BIGINT) AS k,
-       tot.n_rows, tot.n_groups,
-       CAST(sum(CASE WHEN g.n < k.k THEN 1 ELSE 0 END) AS BIGINT)
-         AS groups_below_k,
-       CAST(sum(CASE WHEN g.n < k.k THEN g.n ELSE 0 END) AS BIGINT)
-         AS rows_below_k,
-       lmin.min_l,
-       round(CAST(sum(CASE WHEN g.n < k.k THEN g.n ELSE 0 END) AS DOUBLE)
-             / tot.n_rows, 6) AS frac_reidentifiable
-FROM (VALUES (2), (5), (10)) k(k)
-CROSS JOIN grp g CROSS JOIN tot CROSS JOIN lmin
-GROUP BY k.k, tot.n_rows, tot.n_groups, lmin.min_l
-"""
-
-
-@_register_r4("q_kanonymity_audit", _KANON_SQL)
-def q_kanonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-anonymity / l-diversity audit (Sweeney 2002; Machanavajjhala
-    2007) of the customer table under the quasi-identifier
-    (market segment, nation): for k in {2,5,10} the share of rows living
-    in groups smaller than k is the re-identification exposure a release
-    reviewer signs off on, and min_l (distinct sensitive values — account
-    solvency — in the worst group) is the homogeneity-attack floor
-    (min_l = 1 means some group leaks its members' attribute outright).
-    Complements the DP family (q_dp_release / q_randomized_response):
-    this audits what the RAW release leaks before noise is even
-    considered.
-
-    Scale plan: one group-by over the quasi-identifier (map-side
-    combined), a 3-row k spine, 1-row total/min carries."""
-    cust = load(spark, sf_dir, "customer")
-    q = cust.select(
-        F.col("c_mktsegment").alias("seg"),
-        F.col("c_nationkey").alias("nat"),
-        (F.col("c_acctbal") >= 0).cast("int").alias("sens"),
-    )
-    grp = q.groupBy("seg", "nat").agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.countDistinct("sens").cast("bigint").alias("l_div"),
-    )
-    tot = q.agg(
-        F.count("*").cast("bigint").alias("n_rows"),
-        F.countDistinct(F.concat_ws("|", "seg", "nat")).cast("bigint").alias("n_groups"),
-    )
-    lmin = grp.agg(F.min("l_div").cast("bigint").alias("min_l"))
-    ks = spark.createDataFrame([(2,), (5,), (10,)], "k int")
-    return (
-        F.broadcast(ks)
-        .crossJoin(grp)
-        .crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(lmin))
-        .groupBy("k", "n_rows", "n_groups", "min_l")
-        .agg(
-            F.sum(F.when(F.col("n") < F.col("k"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("groups_below_k"),
-            F.sum(F.when(F.col("n") < F.col("k"), F.col("n")).otherwise(0))
-            .cast("bigint")
-            .alias("rows_below_k"),
-        )
-        .select(
-            F.col("k").cast("bigint").alias("k"),
-            "n_rows", "n_groups", "groups_below_k", "rows_below_k", "min_l",
-            F.round(
-                F.col("rows_below_k").cast("double") / F.col("n_rows"), 6
-            ).alias("frac_reidentifiable"),
-        )
-    )
 
 
 _BINSEG_SQL = """
@@ -11178,10 +10413,8 @@ def q_stable_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round 4: serving/storage-infrastructure trio — prefix-cache hit audit
-# (vLLM / SGLang RadixAttention-style KV reuse), Merkle anti-entropy
-# between two table snapshots (Merkle 1987; Dynamo/Cassandra repair), and
-# rendezvous (HRW, Thaler-Ravishankar 1996) vs mod-N resharding.
+# Round 4: prefix-cache hit audit (vLLM / SGLang RadixAttention-style KV
+# reuse).
 # --------------------------------------------------------------------------
 
 _PREFIX_CACHE_SQL = f"""
@@ -11255,763 +10488,6 @@ def q_prefix_cache(spark: SparkSession, sf_dir: str) -> DataFrame:
         saved.cast("long").alias("tokens_saved"),
         total.cast("long").alias("tokens_total"),
         F.round(saved.cast("double") / total, 6).alias("hit_rate"),
-    )
-
-
-_MERKLE_P = 2_147_483_647
-
-
-def _merkle_sql() -> str:
-    """Builds the 9-level Merkle CTE chain (leaves lv8 .. root lv0).
-
-    Snapshot A = orders as stored; snapshot B = the same table after a
-    deterministic md5-selected delta (1/16 of keys deleted, 1/16
-    price-bumped). Node combine is the left/right-distinguishing linear
-    hash (2*left + 3*right) mod P so sibling swaps and child moves change
-    the parent — the property a plain sum lacks."""
-    P = _MERKLE_P
-    parts = [
-        """
-base AS (
-  SELECT o_orderkey AS k,
-         CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
-         substr(md5(CAST(o_orderkey AS VARCHAR) || ':d'), 1, 1) AS dn
-  FROM orders
-),
-allr AS (
-  SELECT 'a' AS side, k, cents FROM base
-  UNION ALL
-  SELECT 'b', k, CASE WHEN dn = '1' THEN cents + 100 ELSE cents END
-  FROM base WHERE dn <> '0'
-),
-fp AS (
-  SELECT side, CAST(k % 256 AS INT) AS node,
-         CAST(('0x' || substr(md5(CAST(k AS VARCHAR) || ':'
-                 || CAST(cents AS VARCHAR)), 1, 12)) AS BIGINT) AS f
-  FROM allr
-),
-leaf AS (
-  SELECT side, node, CAST((1 + sum(f)) % {P} AS BIGINT) AS v
-  FROM fp GROUP BY 1, 2
-),
-spine AS (SELECT CAST(t.i AS INT) AS node FROM unnest(range(256)) AS t(i)),
-sides AS (SELECT 'a' AS side UNION ALL SELECT 'b'),
-lv8 AS (
-  SELECT s.side, sp.node, coalesce(l.v, 0) AS v
-  FROM sides s CROSS JOIN spine sp
-  LEFT JOIN leaf l ON l.side = s.side AND l.node = sp.node
-)""".format(P=P)
-    ]
-    for lv in range(7, -1, -1):
-        parts.append(
-            f"""
-lv{lv} AS (
-  SELECT side, CAST(node // 2 AS INT) AS node,
-         CAST((2 * coalesce(max(CASE WHEN node % 2 = 0 THEN v END), 0)
-             + 3 * coalesce(max(CASE WHEN node % 2 = 1 THEN v END), 0))
-             % {P} AS BIGINT) AS v
-  FROM lv{lv + 1} GROUP BY 1, 2
-)"""
-        )
-    tree_union = "\n  UNION ALL ".join(
-        f"SELECT {lv} AS level, side, node, v FROM lv{lv}" for lv in range(9)
-    )
-    parts.append(
-        f"""
-tree AS (
-  {tree_union}
-),
-cmp AS (
-  SELECT level, node,
-         max(CASE WHEN side = 'a' THEN v END) AS va,
-         max(CASE WHEN side = 'b' THEN v END) AS vb
-  FROM tree GROUP BY 1, 2
-),
-delta AS (
-  SELECT CAST(count(CASE WHEN dn = '0' THEN 1 END) AS BIGINT) AS n_deleted,
-         CAST(count(CASE WHEN dn = '1' THEN 1 END) AS BIGINT) AS n_modified,
-         CAST(count(*) AS BIGINT) AS n_rows_a
-  FROM base
-)"""
-    )
-    body = (
-        "WITH " + ",".join(parts) + """
-SELECT CAST(cmp.level AS INT) AS level,
-       CAST(count(*) AS BIGINT) AS n_nodes,
-       CAST(count(CASE WHEN cmp.va <> cmp.vb THEN 1 END) AS BIGINT)
-         AS n_diff,
-       d.n_rows_a, d.n_deleted, d.n_modified
-FROM cmp CROSS JOIN delta d
-GROUP BY 1, 4, 5, 6
-"""
-    )
-    return body
-
-
-@_register_r4("q_merkle_diff", _merkle_sql())
-def q_merkle_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Merkle anti-entropy audit (Merkle 1987; the Dynamo/Cassandra
-    repair protocol): two snapshots of the orders table — A as stored, B
-    after a deterministic md5-selected delta (1/16 of keys deleted, 1/16
-    price-bumped by $1) — are summarized as 9-level binary hash trees
-    over 256 key-range leaves (leaf = order-insensitive sum of 48-bit row
-    fingerprints, parent = (2*left + 3*right) mod 2^31-1 so left/right
-    swaps change the parent). The per-level diff count is the sync
-    workload ledger: a replica pair exchanges O(diff-paths * depth)
-    hashes instead of the full table, and dirty leaves at level 8 bound
-    the rows that must ship. Root disagreement (level 0, n_diff = 1) is
-    the one-hash liveness check. n_deleted/n_modified carries make the
-    expected dirty-leaf ceiling auditable in-row.
-
-    Scale plan: row fingerprints and leaf sums are one map-side-combined
-    groupBy per side (the 256-leaf spine is a broadcast dimension); the
-    8 combine levels operate on <= 512-row frames — tree size is fixed
-    regardless of table size, THE Merkle property. 48-bit fingerprints
-    keep the per-leaf sum under 2^63 up to ~10^14 rows/leaf."""
-    orders = load(spark, sf_dir, "orders")
-    P = F.lit(_MERKLE_P)
-    base = orders.select(
-        F.col("o_orderkey").alias("k"),
-        F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long").alias("cents"),
-        F.substring(
-            F.md5(F.concat(F.col("o_orderkey").cast("string"), F.lit(":d"))), 1, 1
-        ).alias("dn"),
-    )
-    allr = base.select(F.lit("a").alias("side"), "k", "cents").unionAll(
-        base.filter(F.col("dn") != "0").select(
-            F.lit("b").alias("side"),
-            "k",
-            F.when(F.col("dn") == "1", F.col("cents") + 100)
-            .otherwise(F.col("cents"))
-            .alias("cents"),
-        )
-    )
-    fp = allr.select(
-        "side",
-        (F.col("k") % 256).cast("int").alias("node"),
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("k").cast("string"),
-                        F.lit(":"),
-                        F.col("cents").cast("string"),
-                    )
-                ),
-                1,
-                12,
-            ),
-            16,
-            10,
-        ).cast("long").alias("f"),
-    )
-    leaf = fp.groupBy("side", "node").agg(
-        ((F.sum("f") + 1) % P).cast("long").alias("v")
-    )
-    spine = spark.range(256).select(F.col("id").cast("int").alias("node"))
-    sides = spark.createDataFrame([("a",), ("b",)], "side string")
-    lv = (
-        sides.crossJoin(spine)
-        .join(F.broadcast(leaf), ["side", "node"], "left")
-        .select("side", "node", F.coalesce("v", F.lit(0)).alias("v"))
-    )
-    frames = [lv.select(F.lit(8).alias("level"), "side", "node", "v")]
-    for level in range(7, -1, -1):
-        lv = lv.groupBy("side", F.shiftright("node", 1).alias("node")).agg(
-            (
-                (
-                    2 * F.coalesce(
-                        F.max(F.when(F.col("node") % 2 == 0, F.col("v"))), F.lit(0)
-                    )
-                    + 3 * F.coalesce(
-                        F.max(F.when(F.col("node") % 2 == 1, F.col("v"))), F.lit(0)
-                    )
-                )
-                % P
-            ).cast("long").alias("v")
-        )
-        frames.append(lv.select(F.lit(level).alias("level"), "side", "node", "v"))
-    tree = frames[0]
-    for fr in frames[1:]:
-        tree = tree.unionAll(fr)
-    cmp = tree.groupBy("level", "node").agg(
-        F.max(F.when(F.col("side") == "a", F.col("v"))).alias("va"),
-        F.max(F.when(F.col("side") == "b", F.col("v"))).alias("vb"),
-    )
-    delta = base.agg(
-        F.count(F.when(F.col("dn") == "0", 1)).cast("long").alias("n_deleted"),
-        F.count(F.when(F.col("dn") == "1", 1)).cast("long").alias("n_modified"),
-        F.count(F.lit(1)).cast("long").alias("n_rows_a"),
-    )
-    return (
-        cmp.groupBy("level")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_nodes"),
-            F.count(F.when(F.col("va") != F.col("vb"), 1))
-            .cast("long")
-            .alias("n_diff"),
-        )
-        .crossJoin(F.broadcast(delta))
-        .select(
-            F.col("level").cast("int").alias("level"),
-            "n_nodes", "n_diff", "n_rows_a", "n_deleted", "n_modified",
-        )
-    )
-
-
-_HRW_SQL = """
-WITH nodes AS (SELECT CAST(t.i AS INT) AS node FROM unnest(range(10)) AS t(i)),
-j AS (
-  SELECT o.o_orderkey AS k, n.node,
-         md5(CAST(o.o_orderkey AS VARCHAR) || '#' || CAST(n.node AS VARCHAR)) AS h
-  FROM orders o CROSS JOIN nodes n
-),
-own AS (
-  SELECT k,
-         arg_max(CASE WHEN node < 8 THEN node END,
-                 CASE WHEN node < 8 THEN h END) AS n8,
-         arg_max(node, h) AS n10
-  FROM j GROUP BY k
-),
-both_s AS (
-  SELECT 'hrw' AS scheme, k, n8, n10 FROM own
-  UNION ALL
-  SELECT 'mod', o_orderkey, CAST(o_orderkey % 8 AS INT),
-         CAST(o_orderkey % 10 AS INT)
-  FROM orders
-),
-l10 AS (
-  SELECT scheme, n10 AS node, CAST(count(*) AS BIGINT) AS c
-  FROM both_s GROUP BY 1, 2
-),
-lb AS (
-  SELECT scheme, CAST(max(c) AS BIGINT) AS max_load10,
-         CAST(min(c) AS BIGINT) AS min_load10,
-         CAST(count(*) AS BIGINT) AS n_nodes10
-  FROM l10 GROUP BY 1
-),
-mv AS (
-  SELECT scheme, CAST(count(*) AS BIGINT) AS n_keys,
-         CAST(count(CASE WHEN n8 <> n10 THEN 1 END) AS BIGINT) AS n_moved,
-         CAST(count(CASE WHEN n8 <> n10 AND n10 >= 8 THEN 1 END) AS BIGINT)
-           AS n_to_new,
-         CAST(count(CASE WHEN n8 <> n10 AND n10 < 8 THEN 1 END) AS BIGINT)
-           AS n_cross_old
-  FROM both_s GROUP BY 1
-)
-SELECT mv.scheme, mv.n_keys, mv.n_moved, mv.n_to_new, mv.n_cross_old,
-       round(CAST(mv.n_moved AS DOUBLE) / mv.n_keys, 6) AS remap_pct,
-       lb.max_load10, lb.min_load10, lb.n_nodes10
-FROM mv JOIN lb USING (scheme)
-"""
-
-
-@_register_r4("q_rendezvous_hashing", _HRW_SQL)
-def q_rendezvous_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rendezvous (highest-random-weight) hashing audit (Thaler &
-    Ravishankar 1996), the ringless alternative to q_consistent_hashing:
-    each order key is owned by argmax over nodes of md5(key#node), first
-    under 8 nodes then under 10, and the audit measures the resharding
-    bill — HRW moves only the ~2/10 of keys whose new-node weight wins
-    (all of them TO the new nodes, n_cross_old = 0 is the defining
-    invariant, an exact assert surface in-row) while the mod-N strawman
-    reshuffles ~80% of keys, the classic cache-stampede mistake. Load
-    bounds under the 10-node config sit beside the movement ledger
-    because HRW's other selling point is per-key independence (balance
-    without vnode tuning). md5-weight comparison is plain string order,
-    identical on both engines; no ties (md5 injective on this domain).
-
-    Scale plan: the node table is a 10-row broadcast spine (whitelisted);
-    ownership is a per-key max-by collapsed map-side into one groupBy —
-    no corpus self-join, one pass, constant output."""
-    orders = load(spark, sf_dir, "orders")
-    nodes = spark.range(10).select(F.col("id").cast("int").alias("node"))
-    j = orders.crossJoin(F.broadcast(nodes)).select(
-        F.col("o_orderkey").alias("k"),
-        "node",
-        F.md5(
-            F.concat(
-                F.col("o_orderkey").cast("string"),
-                F.lit("#"),
-                F.col("node").cast("string"),
-            )
-        ).alias("h"),
-    )
-    own = j.groupBy("k").agg(
-        F.max_by(
-            F.when(F.col("node") < 8, F.col("node")),
-            F.when(F.col("node") < 8, F.col("h")),
-        ).alias("n8"),
-        F.max_by("node", "h").alias("n10"),
-    )
-    both_s = own.select(F.lit("hrw").alias("scheme"), "k", "n8", "n10").unionAll(
-        orders.select(
-            F.lit("mod").alias("scheme"),
-            F.col("o_orderkey").alias("k"),
-            (F.col("o_orderkey") % 8).cast("int").alias("n8"),
-            (F.col("o_orderkey") % 10).cast("int").alias("n10"),
-        )
-    )
-    l10 = both_s.groupBy("scheme", "n10").agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
-    lb = l10.groupBy("scheme").agg(
-        F.max("c").cast("long").alias("max_load10"),
-        F.min("c").cast("long").alias("min_load10"),
-        F.count(F.lit(1)).cast("long").alias("n_nodes10"),
-    )
-    moved = F.count(F.when(F.col("n8") != F.col("n10"), 1))
-    mv = both_s.groupBy("scheme").agg(
-        F.count(F.lit(1)).cast("long").alias("n_keys"),
-        moved.cast("long").alias("n_moved"),
-        F.count(F.when((F.col("n8") != F.col("n10")) & (F.col("n10") >= 8), 1))
-        .cast("long")
-        .alias("n_to_new"),
-        F.count(F.when((F.col("n8") != F.col("n10")) & (F.col("n10") < 8), 1))
-        .cast("long")
-        .alias("n_cross_old"),
-        F.round(moved.cast("double") / F.count(F.lit(1)), 6).alias("remap_pct"),
-    )
-    return mv.join(F.broadcast(lb), "scheme").select(
-        "scheme", "n_keys", "n_moved", "n_to_new", "n_cross_old",
-        "remap_pct", "max_load10", "min_load10", "n_nodes10",
-    )
-
-
-# --------------------------------------------------------------------------
-# Round 4: storage-layout advisor trio — columnar encoding advisor
-# (plain/dict/RLE byte model, parquet-style per-page runs), space-filling
-# curve file layout (Hilbert vs Z-order vs row-major zonemap quality), and
-# a roaring-bitmap container advisor (array/bitmap/run per 4096-rid chunk).
-# --------------------------------------------------------------------------
-
-_ENC_COLS = [
-    ("l_returnflag", "l_returnflag"),
-    ("l_linestatus", "l_linestatus"),
-    ("l_quantity", "CAST(CAST(l_quantity AS BIGINT) AS VARCHAR)"),
-    ("l_shipdate", "CAST(CAST(l_shipdate AS DATE) AS VARCHAR)"),
-    ("l_suppkey", "CAST(l_suppkey AS VARCHAR)"),
-]
-
-_ENC_UNION = "\n  UNION ALL ".join(
-    f"SELECT '{n}' AS colname, {e} AS val, l_orderkey, l_linenumber,"
-    f" CAST(l_orderkey // 2048 AS BIGINT) AS page FROM lineitem"
-    for n, e in _ENC_COLS
-)
-
-_ENCODING_SIZE_SQL = f"""
-WITH cols AS (
-  {_ENC_UNION}
-),
-runs AS (
-  SELECT colname, val,
-         CASE WHEN lag(val) OVER (PARTITION BY colname, page
-                ORDER BY l_orderkey, l_linenumber, val) IS DISTINCT FROM val
-              THEN 1 ELSE 0 END AS is_run_start
-  FROM cols
-),
-dict AS (
-  SELECT colname, CAST(count(*) AS BIGINT) AS card,
-         CAST(sum(len(val) + 4) AS BIGINT) AS dict_table_bytes
-  FROM (SELECT DISTINCT colname, val FROM cols) GROUP BY 1
-),
-agg AS (
-  SELECT colname, CAST(count(*) AS BIGINT) AS n_rows,
-         CAST(sum(len(val) + 4) AS BIGINT) AS plain_bytes,
-         CAST(sum(is_run_start) AS BIGINT) AS n_runs
-  FROM runs GROUP BY 1
-),
-sized AS (
-  SELECT a.colname, a.n_rows, d.card, a.n_runs, a.plain_bytes,
-         CASE WHEN d.card <= 256 THEN 1
-              WHEN d.card <= 65536 THEN 2 ELSE 4 END AS code_bytes,
-         d.dict_table_bytes
-  FROM agg a JOIN dict d USING (colname)
-),
-model AS (
-  SELECT colname, n_rows, card, n_runs, plain_bytes,
-         CAST(dict_table_bytes + n_rows * code_bytes AS BIGINT) AS dict_bytes,
-         CAST(dict_table_bytes + n_runs * (code_bytes + 4) AS BIGINT)
-           AS rle_bytes
-  FROM sized
-)
-SELECT colname, n_rows, card, n_runs, plain_bytes, dict_bytes, rle_bytes,
-       CASE WHEN plain_bytes <= dict_bytes AND plain_bytes <= rle_bytes
-            THEN 'plain'
-            WHEN dict_bytes <= rle_bytes THEN 'dict' ELSE 'rle'
-       END AS best_encoding,
-       round(CAST(least(plain_bytes, dict_bytes, rle_bytes) AS DOUBLE)
-             / plain_bytes, 6) AS best_ratio
-FROM model
-"""
-
-
-@_register_r4("q_encoding_size", _ENCODING_SIZE_SQL)
-def q_encoding_size(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Columnar encoding advisor — the exact byte model a writer consults
-    when choosing parquet column encodings: for five lineitem columns
-    rendered as strings, plain = sum(len+4), dictionary = dict table +
-    n * byte-aligned code width (1/2/4 bytes by cardinality), and RLE =
-    dict table + runs * (code + 4-byte length), with runs counted
-    PER 2048-key page in the (l_orderkey, l_linenumber) layout order —
-    parquet RLE resets per page, which is also what keeps the run count
-    embarrassingly parallel. The layout order carries a trailing val
-    tiebreak because (l_orderkey, l_linenumber) is NOT unique in this
-    fixture — residual ties then hold equal values, which cannot move a
-    run boundary, so the count is total-order invariant. best_encoding
-    uses the deterministic tie order plain < dict < rle. Low-cardinality flags should pick dict/rle
-    and the near-unique suppkey should stay plain — the advisor's sanity
-    shape, asserted by the replica.
-
-    Scale plan: the 5-column fanout is a projection-side explode (no
-    spine join); runs come from one lag window per (column, page)
-    partition — page-local, so no global sort and no single-partition
-    window; everything else is map-side-combined groupBys."""
-    li = load(spark, sf_dir, "lineitem")
-    pairs = [
-        ("l_returnflag", F.col("l_returnflag")),
-        ("l_linestatus", F.col("l_linestatus")),
-        ("l_quantity", F.col("l_quantity").cast("long").cast("string")),
-        ("l_shipdate", F.col("l_shipdate").cast("date").cast("string")),
-        ("l_suppkey", F.col("l_suppkey").cast("string")),
-    ]
-    cols = li.select(
-        "l_orderkey",
-        "l_linenumber",
-        (F.col("l_orderkey") / 2048).cast("long").alias("page"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(n).alias("colname"), e.alias("val"))
-                    for n, e in pairs
-                ]
-            )
-        ).alias("cv"),
-    ).select("l_orderkey", "l_linenumber", "page", "cv.colname", "cv.val")
-    w = Window.partitionBy("colname", "page").orderBy(
-        "l_orderkey", "l_linenumber", "val"
-    )
-    runs = cols.select(
-        "colname",
-        "val",
-        F.when(
-            ~F.lag("val").over(w).eqNullSafe(F.col("val")), 1
-        ).otherwise(0).alias("is_run_start"),
-    )
-    dict_t = (
-        cols.select("colname", "val")
-        .distinct()
-        .groupBy("colname")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("card"),
-            F.sum(F.length("val") + 4).cast("long").alias("dict_table_bytes"),
-        )
-    )
-    agg = runs.groupBy("colname").agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum(F.length("val") + 4).cast("long").alias("plain_bytes"),
-        F.sum("is_run_start").cast("long").alias("n_runs"),
-    )
-    code_bytes = (
-        F.when(F.col("card") <= 256, 1)
-        .when(F.col("card") <= 65536, 2)
-        .otherwise(4)
-    )
-    m = agg.join(F.broadcast(dict_t), "colname").select(
-        "colname", "n_rows", "card", "n_runs", "plain_bytes",
-        (F.col("dict_table_bytes") + F.col("n_rows") * code_bytes)
-        .cast("long")
-        .alias("dict_bytes"),
-        (F.col("dict_table_bytes") + F.col("n_runs") * (code_bytes + 4))
-        .cast("long")
-        .alias("rle_bytes"),
-    )
-    return m.select(
-        "colname", "n_rows", "card", "n_runs", "plain_bytes", "dict_bytes",
-        "rle_bytes",
-        F.when(
-            (F.col("plain_bytes") <= F.col("dict_bytes"))
-            & (F.col("plain_bytes") <= F.col("rle_bytes")),
-            "plain",
-        )
-        .when(F.col("dict_bytes") <= F.col("rle_bytes"), "dict")
-        .otherwise("rle")
-        .alias("best_encoding"),
-        F.round(
-            F.least("plain_bytes", "dict_bytes", "rle_bytes").cast("double")
-            / F.col("plain_bytes"),
-            6,
-        ).alias("best_ratio"),
-    )
-
-
-def _hilbert_sql_steps() -> str:
-    """Chained CTEs h3..h0 applying the order-4 Hilbert xy2d recursion
-    (s = 8,4,2,1) to columns (x, y, d). Pure integer arithmetic; the
-    rotation cases mirror the classic rot() exactly."""
-    out = []
-    prev = "cells"
-    for i, s in enumerate((8, 4, 2, 1)):
-        out.append(
-            f"""
-h{i} AS (
-  SELECT o_orderkey, x0, y0,
-         CASE WHEN (y // {s}) % 2 = 1 THEN x
-              WHEN (x // {s}) % 2 = 1 THEN 15 - y ELSE y END AS x,
-         CASE WHEN (y // {s}) % 2 = 1 THEN y
-              WHEN (x // {s}) % 2 = 1 THEN 15 - x ELSE x END AS y,
-         d + {s * s} * (CASE WHEN (x // {s}) % 2 = 1
-                             THEN 3 - (y // {s}) % 2
-                             ELSE (y // {s}) % 2 END) AS d
-  FROM {prev}
-)"""
-        )
-        prev = f"h{i}"
-    return ",".join(out)
-
-
-_HILBERT_SQL = f"""
-WITH cells AS (
-  SELECT o_orderkey,
-         CAST(o_custkey % 16 AS BIGINT) AS x0,
-         CAST((dayofyear(o_orderdate) - 1) // 23 AS BIGINT) AS y0,
-         CAST(o_custkey % 16 AS BIGINT) AS x,
-         CAST((dayofyear(o_orderdate) - 1) // 23 AS BIGINT) AS y,
-         CAST(0 AS BIGINT) AS d
-  FROM orders
-),{_hilbert_sql_steps()},
-keyed AS (
-  SELECT x0 AS x, y0 AS y, d,
-         CAST((x0 % 2) + 2 * (y0 % 2) + 4 * ((x0 // 2) % 2)
-              + 8 * ((y0 // 2) % 2) + 16 * ((x0 // 4) % 2)
-              + 32 * ((y0 // 4) % 2) + 64 * ((x0 // 8) % 2)
-              + 128 * ((y0 // 8) % 2) AS BIGINT) AS z
-  FROM h3
-),
-assign AS (
-  SELECT 'rowmajor' AS layout, CAST(y AS BIGINT) AS file, x, y FROM keyed
-  UNION ALL
-  SELECT 'zorder', CAST(z // 16 AS BIGINT), x, y FROM keyed
-  UNION ALL
-  SELECT 'hilbert', CAST(d // 16 AS BIGINT), x, y FROM keyed
-),
-boxes AS (
-  SELECT layout, file,
-         min(x) AS min_x, max(x) AS max_x, min(y) AS min_y, max(y) AS max_y,
-         CAST(count(*) AS BIGINT) AS n_rows
-  FROM assign GROUP BY 1, 2
-)
-SELECT layout,
-       CAST(count(*) AS BIGINT) AS n_files,
-       CAST(sum(n_rows) AS BIGINT) AS n_rows,
-       CAST(sum((max_x - min_x + 1) * (max_y - min_y + 1)) AS BIGINT)
-         AS sum_bbox_area,
-       CAST(max((max_x - min_x + 1) * (max_y - min_y + 1)) AS BIGINT)
-         AS max_bbox_area,
-       CAST(count(CASE WHEN max_x >= 4 AND min_x <= 7 THEN 1 END) AS BIGINT)
-         AS files_hit_x47,
-       CAST(count(CASE WHEN max_y >= 4 AND min_y <= 7 THEN 1 END) AS BIGINT)
-         AS files_hit_y47
-FROM boxes GROUP BY layout
-"""
-
-
-@_register_r4("q_hilbert_layout", _HILBERT_SQL)
-def q_hilbert_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Space-filling-curve file-layout advisor: orders are mapped onto a
-    16x16 (customer-bucket, day-of-year-bucket) grid and bin-packed into
-    16 files under three layouts — row-major (sort by y), bit-interleaved
-    Z-order, and an order-4 Hilbert curve (the exact xy2d recursion,
-    s = 8,4,2,1 with the n-bound rotation 15-x so coordinates never go
-    negative — integer division/modulo sign semantics differ between
-    engines below zero — unrolled into integer CASE arithmetic; verified
-    a true bijection with unit steps by the replica). Per file the (x, y)
-    bounding box is the zonemap a reader prunes with, so sum/max bbox
-    area and the file-hit counts for the range predicates x in [4,7] and
-    y in [4,7] rank the layouts: row-major prunes only y, the curves
-    prune BOTH dimensions with Hilbert's boxes tighter than Z-order's —
-    the multi-dimensional clustering argument for Hilbert compaction at
-    100 TB, in exact integers.
-
-    Scale plan: curve indices are pure per-row projections (whole-stage
-    codegen, no joins); the layout fanout is a 3-way projection union;
-    zonemaps come from one map-side-combinable groupBy per (layout, file)
-    and a 48-row rollup."""
-    orders = load(spark, sf_dir, "orders")
-    x0 = (F.col("o_custkey") % 16).cast("long")
-    y0 = ((F.dayofyear("o_orderdate") - 1) / 23).cast("long")
-    cells = orders.select(
-        x0.alias("x0"), y0.alias("y0"),
-        x0.alias("x"), y0.alias("y"), F.lit(0).cast("long").alias("d"),
-    )
-    for s in (8, 4, 2, 1):
-        rx = ((F.col("x") / s).cast("long") % 2)
-        ry = ((F.col("y") / s).cast("long") % 2)
-        cells = cells.select(
-            "x0",
-            "y0",
-            F.when(ry == 1, F.col("x"))
-            .when(rx == 1, 15 - F.col("y"))
-            .otherwise(F.col("y"))
-            .alias("x"),
-            F.when(ry == 1, F.col("y"))
-            .when(rx == 1, 15 - F.col("x"))
-            .otherwise(F.col("x"))
-            .alias("y"),
-            (
-                F.col("d")
-                + s * s * F.when(rx == 1, 3 - ry).otherwise(ry)
-            ).alias("d"),
-        )
-    zbits = None
-    for i in range(4):
-        xb = ((F.col("x0") / (2**i)).cast("long") % 2) * (4**i)
-        yb = ((F.col("y0") / (2**i)).cast("long") % 2) * (2 * 4**i)
-        zbits = xb + yb if zbits is None else zbits + xb + yb
-    keyed = cells.select(
-        F.col("x0").alias("x"), F.col("y0").alias("y"), "d",
-        zbits.cast("long").alias("z"),
-    )
-    assign = (
-        keyed.select(F.lit("rowmajor").alias("layout"),
-                     F.col("y").cast("long").alias("file"), "x", "y")
-        .unionAll(
-            keyed.select(F.lit("zorder").alias("layout"),
-                         (F.col("z") / 16).cast("long").alias("file"), "x", "y")
-        )
-        .unionAll(
-            keyed.select(F.lit("hilbert").alias("layout"),
-                         (F.col("d") / 16).cast("long").alias("file"), "x", "y")
-        )
-    )
-    boxes = assign.groupBy("layout", "file").agg(
-        F.min("x").alias("min_x"), F.max("x").alias("max_x"),
-        F.min("y").alias("min_y"), F.max("y").alias("max_y"),
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-    )
-    area = (F.col("max_x") - F.col("min_x") + 1) * (
-        F.col("max_y") - F.col("min_y") + 1
-    )
-    return boxes.groupBy("layout").agg(
-        F.count(F.lit(1)).cast("long").alias("n_files"),
-        F.sum("n_rows").cast("long").alias("n_rows"),
-        F.sum(area).cast("long").alias("sum_bbox_area"),
-        F.max(area).cast("long").alias("max_bbox_area"),
-        F.count(F.when((F.col("max_x") >= 4) & (F.col("min_x") <= 7), 1))
-        .cast("long")
-        .alias("files_hit_x47"),
-        F.count(F.when((F.col("max_y") >= 4) & (F.col("min_y") <= 7), 1))
-        .cast("long")
-        .alias("files_hit_y47"),
-    )
-
-
-_BITMAP_SQL = """
-WITH rids AS (
-  SELECT o_orderpriority AS val, o_orderkey AS rid,
-         CAST(o_orderkey // 4096 AS BIGINT) AS chunk
-  FROM orders
-),
-runs AS (
-  SELECT val, chunk, rid,
-         CASE WHEN lag(rid) OVER (PARTITION BY val, chunk ORDER BY rid)
-                   = rid - 1 THEN 0 ELSE 1 END AS is_run_start
-  FROM rids
-),
-per_chunk AS (
-  SELECT val, chunk, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(is_run_start) AS BIGINT) AS n_runs
-  FROM runs GROUP BY 1, 2
-),
-sized AS (
-  SELECT val, chunk, n, n_runs,
-         2 + 2 * n AS b_array, CAST(512 AS BIGINT) AS b_bitmap,
-         2 + 4 * n_runs AS b_run
-  FROM per_chunk
-),
-chosen AS (
-  SELECT val, chunk, n, n_runs, b_array, b_bitmap, b_run,
-         CASE WHEN b_array <= b_bitmap AND b_array <= b_run THEN 'array'
-              WHEN b_bitmap <= b_run THEN 'bitmap' ELSE 'run' END AS cont,
-         least(b_array, b_bitmap, b_run) AS b_chosen
-  FROM sized
-)
-SELECT val AS value,
-       CAST(sum(n) AS BIGINT) AS n_rids,
-       CAST(count(*) AS BIGINT) AS n_chunks,
-       CAST(count(CASE WHEN cont = 'array' THEN 1 END) AS BIGINT) AS n_array,
-       CAST(count(CASE WHEN cont = 'bitmap' THEN 1 END) AS BIGINT) AS n_bitmap,
-       CAST(count(CASE WHEN cont = 'run' THEN 1 END) AS BIGINT) AS n_run,
-       CAST(sum(b_chosen) AS BIGINT) AS bytes_chosen,
-       CAST(sum(n) * 8 AS BIGINT) AS bytes_plain,
-       round(CAST(sum(b_chosen) AS DOUBLE) / (sum(n) * 8), 6)
-         AS compression_ratio
-FROM chosen GROUP BY 1
-"""
-
-
-@_register_r4("q_bitmap_index", _BITMAP_SQL)
-def q_bitmap_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Roaring-bitmap container advisor (Chambi/Lemire 2016, scaled to
-    4096-rid chunks): for each o_orderpriority posting list, every chunk
-    picks the cheapest of the three roaring containers — sorted array
-    (2 + 2n bytes), fixed bitmap (512 bytes), run container
-    (2 + 4*runs) — with the deterministic tie order array < bitmap <
-    run; runs are maximal consecutive-rid intervals within the chunk.
-    The per-value rollup (container mix, chosen bytes vs the 8-byte/rid
-    plain list) is the index-sizing ledger a 100 TB store consults before
-    materializing a secondary index: 1/5-selectivity postings should land
-    mostly in array containers well under the plain size.
-
-    Scale plan: run detection is one lag window per (value, chunk)
-    partition — chunk-local, parallel by construction; container choice
-    is pure projection; two map-side-combinable groupBys end in 5 rows."""
-    orders = load(spark, sf_dir, "orders")
-    rids = orders.select(
-        F.col("o_orderpriority").alias("val"),
-        F.col("o_orderkey").alias("rid"),
-        (F.col("o_orderkey") / 4096).cast("long").alias("chunk"),
-    )
-    w = Window.partitionBy("val", "chunk").orderBy("rid")
-    runs = rids.select(
-        "val", "chunk", "rid",
-        F.when(F.lag("rid").over(w) == F.col("rid") - 1, 0)
-        .otherwise(1)
-        .alias("is_run_start"),
-    )
-    per_chunk = runs.groupBy("val", "chunk").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("is_run_start").cast("long").alias("n_runs"),
-    )
-    sized = per_chunk.select(
-        "val", "n", "n_runs",
-        (2 + 2 * F.col("n")).alias("b_array"),
-        F.lit(512).cast("long").alias("b_bitmap"),
-        (2 + 4 * F.col("n_runs")).alias("b_run"),
-    )
-    chosen = sized.select(
-        "val", "n",
-        F.when(
-            (F.col("b_array") <= F.col("b_bitmap"))
-            & (F.col("b_array") <= F.col("b_run")),
-            "array",
-        )
-        .when(F.col("b_bitmap") <= F.col("b_run"), "bitmap")
-        .otherwise("run")
-        .alias("cont"),
-        F.least("b_array", "b_bitmap", "b_run").alias("b_chosen"),
-    )
-    return chosen.groupBy(F.col("val").alias("value")).agg(
-        F.sum("n").cast("long").alias("n_rids"),
-        F.count(F.lit(1)).cast("long").alias("n_chunks"),
-        F.count(F.when(F.col("cont") == "array", 1)).cast("long").alias("n_array"),
-        F.count(F.when(F.col("cont") == "bitmap", 1)).cast("long").alias("n_bitmap"),
-        F.count(F.when(F.col("cont") == "run", 1)).cast("long").alias("n_run"),
-        F.sum("b_chosen").cast("long").alias("bytes_chosen"),
-        (F.sum("n") * 8).cast("long").alias("bytes_plain"),
-        F.round(
-            F.sum("b_chosen").cast("double") / (F.sum("n") * 8), 6
-        ).alias("compression_ratio"),
     )
 
 
@@ -12397,77 +10873,9 @@ def q_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round 4: experiment-design trio — two-proportion power/sample-size
-# planning, O'Brien-Fleming group-sequential monitoring, and an
-# effect-size ladder (Cohen's d / Hedges' g / EXACT Cliff's delta via the
-# cdf trick, no pair join).
+# Round 4: experiment design — O'Brien-Fleming group-sequential
+# monitoring.
 # --------------------------------------------------------------------------
-
-_POWER_SQL = """
-WITH seg AS (
-  SELECT c_mktsegment AS segment,
-         CAST(count(CASE WHEN c_acctbal >= 0 THEN 1 END) AS BIGINT) AS k,
-         CAST(count(*) AS BIGINT) AS n
-  FROM customer GROUP BY 1
-),
-mde AS (SELECT CAST(m.d AS DOUBLE) AS delta
-       FROM (VALUES (0.01), (0.02), (0.05)) AS m(d)),
-calc AS (
-  SELECT s.segment, s.k, s.n, m.delta,
-         CAST(s.k AS DOUBLE) / s.n AS p1,
-         CAST(s.k AS DOUBLE) / s.n + m.delta AS p2
-  FROM seg s CROSS JOIN mde m
-)
-SELECT segment, k, n AS n_avail, delta,
-       round(p1, 6) AS p1,
-       CAST(ceil((1.959964 + 0.841621) * (1.959964 + 0.841621)
-                 * (p1 * (1 - p1) + p2 * (1 - p2))
-                 / (delta * delta)) AS BIGINT) AS n_per_arm,
-       CASE WHEN n >= 2 * CAST(ceil((1.959964 + 0.841621)
-                 * (1.959964 + 0.841621)
-                 * (p1 * (1 - p1) + p2 * (1 - p2))
-                 / (delta * delta)) AS BIGINT)
-            THEN 1 ELSE 0 END AS feasible
-FROM calc
-"""
-
-
-@_register_r4("q_power_analysis", _POWER_SQL)
-def q_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-proportion power analysis (the pre-experiment sample-size
-    planner): per customer segment, the observed conversion p1 = share
-    with non-negative balance (exact k/n BIGINTs shipped in-row) and for
-    minimum-detectable-effects delta in {0.01, 0.02, 0.05} the per-arm n
-    from the classic normal-approximation formula (z_a/2 + z_b)^2 *
-    (p1 q1 + p2 q2) / delta^2 at alpha = 0.05 two-sided, power 0.8 — the
-    z constants 1.959964 / 0.841621 are hardcoded planning constants, so
-    the whole expression is one deterministic IEEE chain over exact
-    integers (identical on both engines), and feasible says whether the
-    segment's own population could even host the experiment. The
-    delta-ladder is the dashboard a growth team reads before burning two
-    weeks on an underpowered test.
-
-    Scale plan: one map-side-combined groupBy to 5 rows, a 3-row
-    broadcast MDE spine (whitelisted), projection arithmetic after."""
-    cust = load(spark, sf_dir, "customer")
-    seg = cust.groupBy(F.col("c_mktsegment").alias("segment")).agg(
-        F.count(F.when(F.col("c_acctbal") >= 0, 1)).cast("long").alias("k"),
-        F.count(F.lit(1)).cast("long").alias("n"),
-    )
-    mde = spark.createDataFrame([(0.01,), (0.02,), (0.05,)], "delta double")
-    p1 = F.col("k").cast("double") / F.col("n")
-    p2 = p1 + F.col("delta")
-    zsum = F.lit(1.959964) + F.lit(0.841621)
-    n_req = F.ceil(
-        zsum * zsum * (p1 * (1 - p1) + p2 * (1 - p2))
-        / (F.col("delta") * F.col("delta"))
-    ).cast("long")
-    return seg.crossJoin(F.broadcast(mde)).select(
-        "segment", "k", F.col("n").alias("n_avail"), "delta",
-        F.round(p1, 6).alias("p1"),
-        n_req.alias("n_per_arm"),
-        F.when(F.col("n") >= 2 * n_req, 1).otherwise(0).alias("feasible"),
-    )
 
 
 # O'Brien-Fleming two-sided z bounds for K=5 equally-spaced looks at
@@ -12577,173 +10985,6 @@ def q_group_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(z2, 6).alias("z2"),
         "obf_z",
         F.when(z2 > F.col("obf_z") * F.col("obf_z"), 1).otherwise(0).alias("reject"),
-    )
-
-
-_COHEN_SQL = """
-WITH c AS (
-  SELECT c_mktsegment AS segment,
-         CAST(floor(c_acctbal) AS BIGINT) AS v
-  FROM customer
-),
-vals AS (
-  SELECT segment, v, CAST(count(*) AS BIGINT) AS cnt FROM c GROUP BY 1, 2
-),
-gv AS (
-  SELECT v, CAST(sum(cnt) AS BIGINT) AS gcnt FROM vals GROUP BY 1
-),
-gcum AS (
-  SELECT v, gcnt,
-         CAST(coalesce(sum(gcnt) OVER (ORDER BY v
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-           AS g_below
-  FROM gv
-),
-scum AS (
-  SELECT segment, v, cnt,
-         CAST(coalesce(sum(cnt) OVER (PARTITION BY segment ORDER BY v
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-           AS a_below
-  FROM vals
-),
-tot AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_all,
-         CAST(sum(v) AS BIGINT) AS s_all,
-         CAST(sum(v * v) AS BIGINT) AS ss_all
-  FROM c
-),
-seg AS (
-  SELECT segment, CAST(count(*) AS BIGINT) AS n_g,
-         CAST(sum(v) AS BIGINT) AS s_g,
-         CAST(sum(v * v) AS BIGINT) AS ss_g
-  FROM c GROUP BY 1
-),
-cliff AS (
-  SELECT s.segment,
-         CAST(sum(s.cnt * (g.g_below - s.a_below)) AS BIGINT) AS n_gt,
-         CAST(sum(s.cnt * (g.gcnt - s.cnt)) AS BIGINT) AS n_eq
-  FROM scum s JOIN gcum g USING (v)
-  GROUP BY 1
-)
-SELECT sg.segment, sg.n_g, sg.s_g,
-       round(CAST(sg.s_g AS DOUBLE) / sg.n_g, 6) AS mean_dollars,
-       round((CAST(sg.s_g AS DOUBLE) / sg.n_g
-              - CAST(t.s_all - sg.s_g AS DOUBLE) / (t.n_all - sg.n_g))
-             / sqrt(((sg.ss_g - CAST(sg.s_g AS DOUBLE) * sg.s_g / sg.n_g)
-                     + ((t.ss_all - sg.ss_g)
-                        - CAST(t.s_all - sg.s_g AS DOUBLE)
-                          * (t.s_all - sg.s_g) / (t.n_all - sg.n_g)))
-                    / (t.n_all - 2)), 6) AS cohens_d,
-       round((1 - 3.0 / (4 * (t.n_all - 2) - 1))
-             * (CAST(sg.s_g AS DOUBLE) / sg.n_g
-                - CAST(t.s_all - sg.s_g AS DOUBLE) / (t.n_all - sg.n_g))
-             / sqrt(((sg.ss_g - CAST(sg.s_g AS DOUBLE) * sg.s_g / sg.n_g)
-                     + ((t.ss_all - sg.ss_g)
-                        - CAST(t.s_all - sg.s_g AS DOUBLE)
-                          * (t.s_all - sg.s_g) / (t.n_all - sg.n_g)))
-                    / (t.n_all - 2)), 6) AS hedges_g,
-       CAST(2 * cl.n_gt + cl.n_eq - sg.n_g * (t.n_all - sg.n_g) AS BIGINT)
-         AS cliff_num,
-       CAST(sg.n_g * (t.n_all - sg.n_g) AS BIGINT) AS cliff_den,
-       round(CAST(2 * cl.n_gt + cl.n_eq - sg.n_g * (t.n_all - sg.n_g)
-                  AS DOUBLE) / (sg.n_g * (t.n_all - sg.n_g)), 6) AS cliffs_delta
-FROM seg sg JOIN cliff cl USING (segment) CROSS JOIN tot t
-"""
-
-
-@_register_r4("q_cohens_effects", _COHEN_SQL)
-def q_cohens_effects(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Effect-size ladder per customer segment vs the rest of the
-    population over whole-dollar balances: Cohen's d with the pooled SD
-    (one deterministic IEEE chain over exact BIGINT sufficient stats —
-    sqrt is correctly-rounded, so both engines agree bit-for-bit),
-    Hedges' small-sample correction g = d * (1 - 3/(4*df - 1)), and
-    Cliff's delta computed EXACTLY with no pair join: #(a > b) =
-    sum over segment values of cnt_A(v) * (#all below v - #A below v)
-    via two cumulative windows on the value domain, giving delta =
-    (2*gt + eq - n_A n_B) / (n_A n_B) as an exact integer ratio (the
-    gt - lt identity with ties counted once). d says how big in SD
-    units; Cliff's delta says how often one side wins — the pair every
-    honest A/B readout ships together.
-
-    Scale plan: sufficient stats are map-side-combined groupBys; the
-    Cliff windows run on the (segment, value) and value frames — value-
-    domain bounded, never row-quadratic; one 1-row global carry
-    (whitelisted)."""
-    cust = load(spark, sf_dir, "customer")
-    c = cust.select(
-        F.col("c_mktsegment").alias("segment"),
-        F.floor("c_acctbal").cast("long").alias("v"),
-    )
-    vals = c.groupBy("segment", "v").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    gv = vals.groupBy("v").agg(F.sum("cnt").cast("long").alias("gcnt"))
-    wg = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-    gcum = gv.select(
-        "v", "gcnt",
-        F.coalesce(F.sum("gcnt").over(wg), F.lit(0)).cast("long").alias("g_below"),
-    )
-    ws = (
-        Window.partitionBy("segment")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    scum = vals.select(
-        "segment", "v", "cnt",
-        F.coalesce(F.sum("cnt").over(ws), F.lit(0)).cast("long").alias("a_below"),
-    )
-    tot = c.agg(
-        F.count(F.lit(1)).cast("long").alias("n_all"),
-        F.sum("v").cast("long").alias("s_all"),
-        F.sum(F.col("v") * F.col("v")).cast("long").alias("ss_all"),
-    )
-    seg = c.groupBy("segment").agg(
-        F.count(F.lit(1)).cast("long").alias("n_g"),
-        F.sum("v").cast("long").alias("s_g"),
-        F.sum(F.col("v") * F.col("v")).cast("long").alias("ss_g"),
-    )
-    cliff = (
-        scum.join(gcum, "v")
-        .groupBy("segment")
-        .agg(
-            F.sum(F.col("cnt") * (F.col("g_below") - F.col("a_below")))
-            .cast("long")
-            .alias("n_gt"),
-            F.sum(F.col("cnt") * (F.col("gcnt") - F.col("cnt")))
-            .cast("long")
-            .alias("n_eq"),
-        )
-    )
-    n_b = F.col("n_all") - F.col("n_g")
-    mean_a = F.col("s_g").cast("double") / F.col("n_g")
-    mean_b = (F.col("s_all") - F.col("s_g")).cast("double") / n_b
-    ss_within = (
-        F.col("ss_g") - F.col("s_g").cast("double") * F.col("s_g") / F.col("n_g")
-    ) + (
-        (F.col("ss_all") - F.col("ss_g"))
-        - (F.col("s_all") - F.col("s_g")).cast("double")
-        * (F.col("s_all") - F.col("s_g"))
-        / n_b
-    )
-    d = (mean_a - mean_b) / F.sqrt(ss_within / (F.col("n_all") - 2))
-    cliff_num = (
-        2 * F.col("n_gt") + F.col("n_eq") - F.col("n_g") * n_b
-    )
-    return (
-        seg.join(cliff, "segment")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "segment", "n_g", "s_g",
-            F.round(mean_a, 6).alias("mean_dollars"),
-            F.round(d, 6).alias("cohens_d"),
-            F.round(
-                (1 - 3.0 / (4 * (F.col("n_all") - 2) - 1)) * d, 6
-            ).alias("hedges_g"),
-            cliff_num.cast("long").alias("cliff_num"),
-            (F.col("n_g") * n_b).cast("long").alias("cliff_den"),
-            F.round(
-                cliff_num.cast("double") / (F.col("n_g") * n_b), 6
-            ).alias("cliffs_delta"),
-        )
     )
 
 
@@ -13921,133 +12162,9 @@ def q_dow_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round 4: distributed-data-systems trio — CDC log apply (Debezium-style
-# last-writer-wins fold with tombstones), an at-least-once delivery
-# gap/duplicate ledger, and G-counter CRDT hypercube-gossip convergence.
+# Round 4: distributed-data-systems pair — an at-least-once delivery
+# gap/duplicate ledger and G-counter CRDT hypercube-gossip convergence.
 # --------------------------------------------------------------------------
-
-_CDC_SQL = """
-WITH base AS (
-  SELECT o_orderkey AS k, o_orderstatus AS status,
-         CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
-         substr(md5('u:' || CAST(o_orderkey AS VARCHAR)), 1, 1) AS uh,
-         substr(md5('d:' || CAST(o_orderkey AS VARCHAR)), 1, 1) AS dh
-  FROM orders
-),
-log AS (
-  SELECT k, status, 1 AS seq, 'insert' AS op, cents AS val FROM base
-  UNION ALL
-  SELECT k, status, 2, 'update', cents + 100 FROM base WHERE uh < '6'
-  UNION ALL
-  SELECT k, status, 3, 'delete', NULL FROM base WHERE dh < '2'
-),
-last AS (
-  -- last_val folds over coalesce(val, -1): DuckDB's arg_max SKIPS rows
-  -- whose value arg is NULL (it would return the pre-delete value for a
-  -- tombstoned key) while Spark's max_by returns the NULL itself — the
-  -- sentinel + nullif makes both engines agree that a tombstoned key's
-  -- last_val is NULL (round-4 ADVICE).
-  SELECT k, status,
-         arg_max(op, seq) AS last_op,
-         nullif(arg_max(coalesce(val, -1), seq), -1) AS last_val,
-         CAST(count(*) AS BIGINT) AS n_ops
-  FROM log GROUP BY 1, 2
-)
-SELECT status,
-       CAST(count(*) AS BIGINT) AS n_keys,
-       CAST(sum(n_ops) AS BIGINT) AS n_ops,
-       CAST(count(CASE WHEN last_op <> 'delete' THEN 1 END) AS BIGINT)
-         AS n_live,
-       CAST(count(CASE WHEN last_op = 'delete' THEN 1 END) AS BIGINT)
-         AS n_tombstoned,
-       CAST(sum(n_ops) - count(*) AS BIGINT) AS n_superseded,
-       CAST(sum(CASE WHEN last_op <> 'delete' THEN last_val END) AS BIGINT)
-         AS live_cents,
-       CAST(count(CASE WHEN last_op = 'update' THEN 1 END) AS BIGINT)
-         AS n_live_updated
-FROM last GROUP BY 1
-"""
-
-
-@_register_r4("q_cdc_apply", _CDC_SQL)
-def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CDC log apply — the Debezium-to-lakehouse merge in its exact
-    form: every order key emits a deterministic change stream (insert at
-    seq 1; md5-selected 6/16 get a +$1 update at seq 2; 2/16 a delete at
-    seq 3) and the fold is last-writer-wins by max seq (arg_max /
-    max_by, the single-pass formulation — no window, no sort), with
-    deletes becoming tombstones that drop the key from the live set.
-    NULL-handling note: DuckDB's arg_max skips NULL value args while
-    Spark's max_by does not, so last_val folds over a -1 sentinel +
-    nullif in BOTH engines — tombstoned keys get last_val = NULL
-    everywhere, making the column safe to surface directly.
-    The per-status rollup ships the full conservation ledger: n_ops =
-    n_keys + updates + deletes, n_superseded = ops the fold discarded,
-    and live_cents = the exact post-merge balance — what a MERGE INTO
-    audit compares against the source system after every sync.
-
-    Scale plan: the log is a projection union (no joins); the fold is
-    ONE map-side-combinable groupBy on the key — the shape that absorbs
-    10^12-row change streams; the rollup is 3 rows."""
-    orders = load(spark, sf_dir, "orders")
-    base = orders.select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderstatus").alias("status"),
-        F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long").alias("cents"),
-        F.substring(
-            F.md5(F.concat(F.lit("u:"), F.col("o_orderkey").cast("string"))), 1, 1
-        ).alias("uh"),
-        F.substring(
-            F.md5(F.concat(F.lit("d:"), F.col("o_orderkey").cast("string"))), 1, 1
-        ).alias("dh"),
-    )
-    log = (
-        base.select(
-            "k", "status", F.lit(1).alias("seq"), F.lit("insert").alias("op"),
-            F.col("cents").alias("val"),
-        )
-        .unionAll(
-            base.filter(F.col("uh") < "6").select(
-                "k", "status", F.lit(2).alias("seq"),
-                F.lit("update").alias("op"),
-                (F.col("cents") + 100).alias("val"),
-            )
-        )
-        .unionAll(
-            base.filter(F.col("dh") < "2").select(
-                "k", "status", F.lit(3).alias("seq"),
-                F.lit("delete").alias("op"),
-                F.lit(None).cast("long").alias("val"),
-            )
-        )
-    )
-    # NULL-handling asymmetry (round-4 ADVICE): Spark's max_by returns the
-    # val AT max seq (NULL for a tombstone) but DuckDB's arg_max skips
-    # NULL-valued rows (returning the pre-delete value). Folding over a -1
-    # sentinel + nullif pins both engines to "tombstoned key -> last_val
-    # NULL", so last_val is safe to surface directly in future columns.
-    last = log.groupBy("k", "status").agg(
-        F.max_by("op", "seq").alias("last_op"),
-        F.nullif(
-            F.max_by(F.coalesce("val", F.lit(-1)), "seq"), F.lit(-1)
-        ).alias("last_val"),
-        F.count(F.lit(1)).cast("long").alias("n_ops"),
-    )
-    return last.groupBy("status").agg(
-        F.count(F.lit(1)).cast("long").alias("n_keys"),
-        F.sum("n_ops").cast("long").alias("n_ops"),
-        F.count(F.when(F.col("last_op") != "delete", 1)).cast("long").alias("n_live"),
-        F.count(F.when(F.col("last_op") == "delete", 1))
-        .cast("long")
-        .alias("n_tombstoned"),
-        (F.sum("n_ops") - F.count(F.lit(1))).cast("long").alias("n_superseded"),
-        F.sum(F.when(F.col("last_op") != "delete", F.col("last_val")))
-        .cast("long")
-        .alias("live_cents"),
-        F.count(F.when(F.col("last_op") == "update", 1))
-        .cast("long")
-        .alias("n_live_updated"),
-    )
 
 
 _DELIVERY_SQL = """
@@ -14507,246 +12624,8 @@ def q_checkpoint_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round 4: query-optimizer trio — System-R cardinality estimation audit
-# (q-error), left-deep join-order costing with actual-vs-estimated
-# regret, and a partition-key layout advisor.
+# Round 4: query optimizer — a partition-key layout advisor.
 # --------------------------------------------------------------------------
-
-_JOINCARD_SQL = """
-WITH m AS (
-  SELECT 'orders_customer' AS join_name,
-         (SELECT CAST(count(*) AS BIGINT) FROM orders) AS n_left,
-         (SELECT CAST(count(*) AS BIGINT) FROM customer) AS n_right,
-         (SELECT CAST(count(DISTINCT o_custkey) AS BIGINT) FROM orders)
-           AS d_left,
-         (SELECT CAST(count(DISTINCT c_custkey) AS BIGINT) FROM customer)
-           AS d_right,
-         (SELECT CAST(count(*) AS BIGINT)
-          FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey)
-           AS actual
-  UNION ALL
-  SELECT 'lineitem_orders',
-         (SELECT CAST(count(*) AS BIGINT) FROM lineitem),
-         (SELECT CAST(count(*) AS BIGINT) FROM orders),
-         (SELECT CAST(count(DISTINCT l_orderkey) AS BIGINT) FROM lineitem),
-         (SELECT CAST(count(DISTINCT o_orderkey) AS BIGINT) FROM orders),
-         (SELECT CAST(count(*) AS BIGINT)
-          FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey)
-  UNION ALL
-  SELECT 'lineitem_part',
-         (SELECT CAST(count(*) AS BIGINT) FROM lineitem),
-         (SELECT CAST(count(*) AS BIGINT) FROM part),
-         (SELECT CAST(count(DISTINCT l_partkey) AS BIGINT) FROM lineitem),
-         (SELECT CAST(count(DISTINCT p_partkey) AS BIGINT) FROM part),
-         (SELECT CAST(count(*) AS BIGINT)
-          FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey)
-)
-SELECT join_name, n_left, n_right, d_left, d_right,
-       CAST(n_left * n_right AS BIGINT) AS est_num,
-       CAST(greatest(d_left, d_right) AS BIGINT) AS est_den,
-       round(CAST(n_left AS DOUBLE) * n_right / greatest(d_left, d_right), 4)
-         AS est_rows,
-       actual,
-       round(greatest(
-         (CAST(n_left AS DOUBLE) * n_right / greatest(d_left, d_right))
-           / actual,
-         actual / (CAST(n_left AS DOUBLE) * n_right
-                   / greatest(d_left, d_right))), 6) AS q_error
-FROM m
-"""
-
-
-@_register_r4("q_join_cardinality", _JOINCARD_SQL)
-def q_join_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """System-R cardinality estimation audit (Selinger 1979): for the
-    three canonical TPC-H join edges, the uniformity-assumption estimate
-    |A||B| / max(d_A, d_B) ships as an exact integer RATIONAL
-    (est_num / est_den) beside the true join size, and the verdict is
-    the q-error max(est/actual, actual/est) — the metric the learned-
-    cardinality literature standardized on. On FK joins the containment
-    assumption is exact, so q-error should sit at ~1.0: this query is
-    the regression gate a cost model runs after every stats refresh,
-    and the place a 100 TB planner discovers its distinct counts are
-    stale before a broadcast decision burns the cluster.
-
-    Scale plan: six count/distinct aggregates (map-side combined; at
-    production scale the distinct counts come from the HLL sketches the
-    repo already audits in q_hll_audit) + three equi-join counts —
-    everything collapses to a 3-row ledger."""
-    o = load(spark, sf_dir, "orders")
-    c = load(spark, sf_dir, "customer")
-    li = load(spark, sf_dir, "lineitem")
-    p = load(spark, sf_dir, "part")
-
-    def edge(name, a, b, ka, kb):
-        na = a.count()
-        nb = b.count()
-        da = a.select(ka).distinct().count()
-        db = b.select(kb).distinct().count()
-        actual = a.join(b, a[ka] == b[kb]).count()
-        return (name, na, nb, da, db, actual)
-
-    rows = [
-        edge("orders_customer", o, c, "o_custkey", "c_custkey"),
-        edge("lineitem_orders", li, o, "l_orderkey", "o_orderkey"),
-        edge("lineitem_part", li, p, "l_partkey", "p_partkey"),
-    ]
-    m = spark.createDataFrame(
-        rows,
-        "join_name string, n_left long, n_right long, d_left long, "
-        "d_right long, actual long",
-    )
-    est = F.col("n_left").cast("double") * F.col("n_right") / F.greatest(
-        "d_left", "d_right"
-    )
-    return m.select(
-        "join_name", "n_left", "n_right", "d_left", "d_right",
-        (F.col("n_left") * F.col("n_right")).cast("long").alias("est_num"),
-        F.greatest("d_left", "d_right").cast("long").alias("est_den"),
-        F.round(est, 4).alias("est_rows"),
-        "actual",
-        F.round(
-            F.greatest(est / F.col("actual"), F.col("actual") / est), 6
-        ).alias("q_error"),
-    )
-
-
-_JOINORDER_SQL = """
-WITH stats AS (
-  SELECT
-    (SELECT CAST(count(*) AS BIGINT) FROM customer) AS n_c,
-    (SELECT CAST(count(*) AS BIGINT) FROM orders) AS n_o,
-    (SELECT CAST(count(*) AS BIGINT) FROM lineitem) AS n_l,
-    (SELECT CAST(count(*) AS BIGINT) FROM orders WHERE o_orderstatus = 'F')
-      AS n_of,
-    (SELECT CAST(count(DISTINCT c_custkey) AS BIGINT) FROM customer) AS d_cc,
-    (SELECT CAST(count(DISTINCT o_custkey) AS BIGINT) FROM orders) AS d_oc,
-    (SELECT CAST(count(DISTINCT o_orderkey) AS BIGINT) FROM orders) AS d_ok,
-    (SELECT CAST(count(DISTINCT l_orderkey) AS BIGINT) FROM lineitem) AS d_lk
-),
-act AS (
-  SELECT
-    (SELECT CAST(count(*) AS BIGINT)
-     FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey) AS a_co,
-    (SELECT CAST(count(*) AS BIGINT)
-     FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey) AS a_ol,
-    (SELECT CAST(count(*) AS BIGINT)
-     FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
-     JOIN lineitem l ON o.o_orderkey = l.l_orderkey) AS a_col,
-    (SELECT CAST(count(*) AS BIGINT)
-     FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-     WHERE o.o_orderstatus = 'F') AS a_ofl,
-    (SELECT CAST(count(*) AS BIGINT)
-     FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
-     JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-     WHERE o.o_orderstatus = 'F') AS a_ofcl
-),
-plans AS (
-  SELECT 'co_then_l' AS plan,
-         CAST(s.n_c AS DOUBLE) * s.n_o / greatest(s.d_cc, s.d_oc)
-         + (CAST(s.n_c AS DOUBLE) * s.n_o / greatest(s.d_cc, s.d_oc))
-           * s.n_l / greatest(s.d_ok, s.d_lk) AS est_cost,
-         a.a_co + a.a_col AS actual_cost
-  FROM stats s CROSS JOIN act a
-  UNION ALL
-  SELECT 'ol_then_c',
-         CAST(s.n_o AS DOUBLE) * s.n_l / greatest(s.d_ok, s.d_lk)
-         + (CAST(s.n_o AS DOUBLE) * s.n_l / greatest(s.d_ok, s.d_lk))
-           * s.n_c / greatest(s.d_oc, s.d_cc),
-         a.a_ol + a.a_col
-  FROM stats s CROSS JOIN act a
-  UNION ALL
-  SELECT 'filtered_ofl_then_c',
-         CAST(s.n_of AS DOUBLE) * s.n_l / greatest(s.d_ok, s.d_lk)
-         + (CAST(s.n_of AS DOUBLE) * s.n_l / greatest(s.d_ok, s.d_lk))
-           * s.n_c / greatest(s.d_oc, s.d_cc),
-         a.a_ofl + a.a_ofcl
-  FROM stats s CROSS JOIN act a
-),
-best AS (
-  SELECT min(actual_cost) AS best_actual FROM plans
-),
-pick AS (
-  SELECT plan AS picked FROM (
-    SELECT plan, row_number() OVER (ORDER BY est_cost, plan) AS rn FROM plans
-  ) WHERE rn = 1
-)
-SELECT p.plan, round(p.est_cost, 4) AS est_cost, p.actual_cost,
-       CASE WHEN p.plan = pk.picked THEN 1 ELSE 0 END AS picked,
-       b.best_actual,
-       round(CAST(p.actual_cost AS DOUBLE) / b.best_actual, 6)
-         AS cost_vs_best
-FROM plans p CROSS JOIN best b CROSS JOIN pick pk
-"""
-
-
-@_register_r4("q_join_order_cost", _JOINORDER_SQL)
-def q_join_order_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left-deep join-order mini-optimizer over customer-orders-lineitem
-    (the Selinger enumeration in miniature): three valid left-deep plans
-    — (C JOIN O) then L, (O JOIN L) then C, and the predicate-pushed
-    sigma_F(O) JOIN L then C — are each costed by the materialization
-    model (sum of estimated intermediate sizes under the System-R
-    uniformity estimate) and by the TRUE intermediate sizes, and the
-    picked = argmin-estimate plan carries its regret cost_vs_best
-    against the actual optimum. The filtered plan demonstrates WHY
-    pushdown wins (the selectivity multiplies through both
-    intermediates); a regret near 1.0 is the certificate that the
-    estimate ordering matches the true ordering — the property a
-    planner actually needs, not accurate absolute numbers.
-
-    Scale plan: the costing inputs are count/distinct aggregates and
-    three join counts (stats-table lookups in production); the plan
-    frame is 3 rows. Estimate ties pinned by plan name."""
-    c = load(spark, sf_dir, "customer")
-    o = load(spark, sf_dir, "orders")
-    li = load(spark, sf_dir, "lineitem")
-    n_c, n_o, n_l = c.count(), o.count(), li.count()
-    n_of = o.filter(F.col("o_orderstatus") == "F").count()
-    d_cc = c.select("c_custkey").distinct().count()
-    d_oc = o.select("o_custkey").distinct().count()
-    d_ok = o.select("o_orderkey").distinct().count()
-    d_lk = li.select("l_orderkey").distinct().count()
-    a_co = c.join(o, c["c_custkey"] == o["o_custkey"]).count()
-    a_ol = o.join(li, o["o_orderkey"] == li["l_orderkey"]).count()
-    col3 = c.join(o, c["c_custkey"] == o["o_custkey"]).join(
-        li, F.col("o_orderkey") == li["l_orderkey"]
-    )
-    a_col = col3.count()
-    of = o.filter(F.col("o_orderstatus") == "F")
-    a_ofl = of.join(li, of["o_orderkey"] == li["l_orderkey"]).count()
-    a_ofcl = (
-        c.join(of, c["c_custkey"] == of["o_custkey"])
-        .join(li, F.col("o_orderkey") == li["l_orderkey"])
-        .count()
-    )
-    e_co = n_c * n_o / max(d_cc, d_oc)
-    e_ol = n_o * n_l / max(d_ok, d_lk)
-    e_ofl = n_of * n_l / max(d_ok, d_lk)
-    plans = [
-        ("co_then_l", e_co + e_co * n_l / max(d_ok, d_lk), a_co + a_col),
-        ("ol_then_c", e_ol + e_ol * n_c / max(d_oc, d_cc), a_ol + a_col),
-        (
-            "filtered_ofl_then_c",
-            e_ofl + e_ofl * n_c / max(d_oc, d_cc),
-            a_ofl + a_ofcl,
-        ),
-    ]
-    best_actual = min(a for _p, _e, a in plans)
-    picked = min(plans, key=lambda pea: (pea[1], pea[0]))[0]
-    df = spark.createDataFrame(
-        plans, "plan string, est_cost_raw double, actual_cost long"
-    )
-    return df.select(
-        "plan",
-        F.round("est_cost_raw", 4).alias("est_cost"),
-        "actual_cost",
-        F.when(F.col("plan") == picked, 1).otherwise(0).alias("picked"),
-        F.lit(best_actual).cast("long").alias("best_actual"),
-        F.round(F.col("actual_cost").cast("double") / best_actual, 6).alias(
-            "cost_vs_best"
-        ),
-    )
 
 
 _PARTADV_SQL = """
@@ -15104,230 +12983,8 @@ def q_histogram_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round 4: relational/scheduling/stat trio — the skyline (Pareto-front)
-# operator via RANGE-frame running maxima, critical-path method over a
-# layered task DAG (max-plus relaxation), and the exact-integer
-# Cramér-von Mises two-sample statistic.
+# Round 4: the exact-integer Cramér-von Mises two-sample statistic.
 # --------------------------------------------------------------------------
-
-_SKYLINE_SQL = """
-WITH p AS (
-  SELECT p_partkey, CAST(floor(p_retailprice * 100 + 0.5) AS BIGINT) AS cents,
-         CAST(p_size AS BIGINT) AS size
-  FROM part
-),
-m AS (
-  SELECT p_partkey, cents, size,
-         max(size) OVER (ORDER BY cents
-           RANGE BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS m_strict,
-         max(size) OVER (ORDER BY cents
-           RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS m_incl
-  FROM p
-),
-tot AS (SELECT CAST(count(*) AS BIGINT) AS n_total FROM p)
-SELECT m.p_partkey, m.cents, m.size, t.n_total
-FROM m CROSS JOIN tot t
-WHERE (m.m_strict IS NULL OR m.m_strict < m.size) AND m.m_incl <= m.size
-"""
-
-
-@_register_r4("q_skyline", _SKYLINE_SQL)
-def q_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skyline / Pareto-front operator (Borzsony-Kossmann-Stocker 2001)
-    over parts, minimizing price and maximizing size — the
-    multi-objective SELECT that relational engines never got as a
-    keyword: a part is dominated iff some part is strictly cheaper with
-    at least equal size, or at most equal price with strictly larger
-    size, and BOTH conditions collapse into two RANGE-frame running
-    maxima over the price axis (max size strictly below this price; max
-    size at-or-below it) — one sort, one window pass, no pair join, the
-    formulation that makes 2-D skylines linear after sort at any scale.
-    Equal (price, size) twins survive together (neither dominates).
-    Exact integer cents; the replica cross-checks with the O(n^2)
-    dominance scan and verifies the front is an antichain.
-
-    Scale plan: one global sort window (dist_dense_rank shape at
-    production scale); the RANGE frames are value-based so price ties
-    are handled exactly; output is front-sized. 1-row count carry."""
-    p = load(spark, sf_dir, "part").select(
-        "p_partkey",
-        F.floor(F.col("p_retailprice") * 100 + 0.5).cast("long").alias("cents"),
-        F.col("p_size").cast("long").alias("size"),
-    )
-    w_strict = (
-        Window.orderBy("cents").rangeBetween(Window.unboundedPreceding, -1)
-    )
-    w_incl = Window.orderBy("cents").rangeBetween(Window.unboundedPreceding, 0)
-    m = p.select(
-        "p_partkey", "cents", "size",
-        F.max("size").over(w_strict).alias("m_strict"),
-        F.max("size").over(w_incl).alias("m_incl"),
-    )
-    tot = p.agg(F.count(F.lit(1)).cast("long").alias("n_total"))
-    return (
-        m.filter(
-            (F.col("m_strict").isNull() | (F.col("m_strict") < F.col("size")))
-            & (F.col("m_incl") <= F.col("size"))
-        )
-        .crossJoin(F.broadcast(tot))
-        .select("p_partkey", "cents", "size", "n_total")
-    )
-
-
-def _cpm_sql() -> str:
-    """7 unrolled max-plus rounds: es_{t+1}(j) = max(es_t(j),
-    max over edges i->j of es_t(i) + dur_i)."""
-    blocks = []
-    prev = "es0"
-    for r in range(1, 8):
-        blocks.append(
-            f"""
-es{r} AS (
-  SELECT n.task, n.dur,
-         CAST(greatest(n.es, coalesce(mx.cand, 0)) AS BIGINT) AS es
-  FROM {prev} n
-  LEFT JOIN (
-    SELECT e.dst AS task, max(p.es + p.dur) AS cand
-    FROM edges e JOIN {prev} p ON p.task = e.src
-    GROUP BY 1
-  ) mx ON mx.task = n.task
-)""".strip()
-        )
-        prev = f"es{r}"
-    return ",\n".join(blocks)
-
-
-_CPM_SQL = f"""
-WITH tasks AS (
-  SELECT CAST(t.i AS BIGINT) AS task,
-         CAST(1 + ('0x' || substr(md5('dur:' || CAST(t.i AS VARCHAR)), 1, 1))
-              ::BIGINT AS BIGINT) AS dur
-  FROM unnest(range(64)) AS t(i)
-),
-edges AS (
-  SELECT a.task AS src, b.task AS dst
-  FROM tasks a JOIN tasks b
-    ON b.task // 8 = a.task // 8 + 1
-  WHERE substr(md5('e:' || CAST(a.task AS VARCHAR) || '-'
-               || CAST(b.task AS VARCHAR)), 1, 1) < '6'
-),
-es0 AS (SELECT task, dur, CAST(0 AS BIGINT) AS es FROM tasks),
-{_cpm_sql()},
-fin AS (
-  SELECT task, dur, es, es + dur AS ef,
-         CAST(task // 8 AS BIGINT) AS layer
-  FROM es7
-),
-mk AS (SELECT CAST(max(ef) AS BIGINT) AS makespan FROM fin),
-indeg AS (
-  SELECT dst AS task, CAST(count(*) AS BIGINT) AS n_preds
-  FROM edges GROUP BY 1
-)
-SELECT f.task, f.layer, f.dur, f.es, f.ef,
-       coalesce(i.n_preds, 0) AS n_preds,
-       m.makespan,
-       CASE WHEN f.ef = m.makespan THEN 1 ELSE 0 END AS on_critical_end
-FROM fin f LEFT JOIN indeg i USING (task) CROSS JOIN mk m
-"""
-
-
-@_register_r4("q_critical_path", _CPM_SQL)
-def q_critical_path(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Critical-path method (CPM, Kelley-Walker 1959) over a layered
-    64-task DAG (md5 durations 1..16; edges only cross adjacent 8-task
-    layers, so the longest path is <= 7 hops BY CONSTRUCTION and 7
-    unrolled max-plus relaxation rounds es(j) = max(es(j), max over
-    preds es(i) + dur(i)) reach the exact fixpoint — the tropical-
-    semiring twin of q_bellman_ford_hubs' min-plus). Earliest start /
-    finish per task, the makespan, and the tasks whose finish IS the
-    makespan (the critical chain ends) are the schedule a DAG
-    orchestrator derives before assigning workers; every number is an
-    exact BIGINT and the replica verifies the fixpoint against a
-    recursive longest-path computation plus the es >= preds' ef
-    feasibility invariant on every edge.
-
-    Scale plan: each round is one equi-join edges-to-states + max
-    groupBy (the Pregel relaxation shape); frames are DAG-sized
-    (metadata, not corpus). 1-row makespan carry."""
-    tasks = spark.range(64).select(
-        F.col("id").cast("long").alias("task"),
-        (
-            1
-            + F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("dur:"), F.col("id").cast("string"))), 1, 1
-                ),
-                16,
-                10,
-            ).cast("long")
-        ).alias("dur"),
-    )
-    a = tasks.select(F.col("task").alias("src"))
-    b = tasks.select(F.col("task").alias("dst"))
-    edges = (
-        a.crossJoin(b)
-        .filter(
-            F.floor(F.col("dst") / 8) == F.floor(F.col("src") / 8) + 1
-        )
-        .filter(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("e:"), F.col("src").cast("string"), F.lit("-"),
-                        F.col("dst").cast("string"),
-                    )
-                ),
-                1,
-                1,
-            )
-            < "6"
-        )
-        .localCheckpoint()
-    )
-    es = tasks.select("task", "dur", F.lit(0).cast("long").alias("es"))
-    for _r in range(7):
-        cand = (
-            edges.join(
-                es.select(
-                    F.col("task").alias("src"), F.col("es").alias("p_es"),
-                    F.col("dur").alias("p_dur"),
-                ),
-                "src",
-            )
-            .groupBy(F.col("dst").alias("task"))
-            .agg(F.max(F.col("p_es") + F.col("p_dur")).alias("cand"))
-        )
-        es = (
-            es.join(cand, "task", "left")
-            .select(
-                "task", "dur",
-                F.greatest("es", F.coalesce("cand", F.lit(0)))
-                .cast("long")
-                .alias("es"),
-            )
-            .localCheckpoint()
-        )
-    fin = es.select(
-        "task", "dur", "es",
-        (F.col("es") + F.col("dur")).alias("ef"),
-        F.floor(F.col("task") / 8).cast("long").alias("layer"),
-    )
-    mk = fin.agg(F.max("ef").cast("long").alias("makespan"))
-    indeg = edges.groupBy(F.col("dst").alias("task")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_preds")
-    )
-    return (
-        fin.join(indeg, "task", "left")
-        .crossJoin(F.broadcast(mk))
-        .select(
-            "task", "layer", "dur", "es", "ef",
-            F.coalesce("n_preds", F.lit(0)).cast("long").alias("n_preds"),
-            "makespan",
-            F.when(F.col("ef") == F.col("makespan"), 1)
-            .otherwise(0)
-            .alias("on_critical_end"),
-        )
-    )
 
 
 _CVM_SQL = """
@@ -15723,10 +13380,7 @@ def q_stream_state_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round 4: KG-eval / IVM / mergeable-sampling trio — TransE link
-# prediction ranking in exact integer L1 geometry, incremental view
-# maintenance audited against full recompute, and the bottom-k
-# mergeability certificate.
+# Round 4: TransE link prediction ranking in exact integer L1 geometry.
 # --------------------------------------------------------------------------
 
 
@@ -15930,200 +13584,6 @@ def q_transe_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.min("n_cands").cast("long").alias("min_cands"),
         F.max("n_cands").cast("long").alias("max_cands"),
-    )
-
-
-_IVM_SQL = """
-WITH base AS (
-  SELECT o_orderkey AS k, o_orderstatus AS status,
-         CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
-         substr(md5('u:' || CAST(o_orderkey AS VARCHAR)), 1, 1) < '6' AS upd,
-         substr(md5('d:' || CAST(o_orderkey AS VARCHAR)), 1, 1) < '2' AS del
-  FROM orders
-),
-full_v AS (
-  SELECT status, CAST(count(*) AS BIGINT) AS f_count,
-         CAST(sum(CASE WHEN upd THEN cents + 100 ELSE cents END) AS BIGINT)
-           AS f_cents
-  FROM base WHERE NOT del GROUP BY 1
-),
-agg AS (
-  SELECT status,
-         CAST(count(*) AS BIGINT) AS b_count,
-         CAST(sum(cents) AS BIGINT) AS b_cents,
-         CAST(count(CASE WHEN del THEN 1 END) AS BIGINT) AS n_del,
-         CAST(count(CASE WHEN upd THEN 1 END) AS BIGINT) AS n_upd,
-         CAST(sum(CASE WHEN del THEN cents
-                       + CASE WHEN upd THEN 100 ELSE 0 END
-                  ELSE 0 END) AS BIGINT) AS del_cents_final
-  FROM base GROUP BY 1
-)
-SELECT a.status, a.b_count, a.b_cents, a.n_del, a.n_upd,
-       a.del_cents_final,
-       CAST(a.b_count - a.n_del AS BIGINT) AS i_count,
-       CAST(a.b_cents + 100 * a.n_upd - a.del_cents_final AS BIGINT)
-         AS i_cents,
-       f.f_count, f.f_cents,
-       CASE WHEN a.b_count - a.n_del = f.f_count THEN 1 ELSE 0 END
-         AS count_match,
-       CASE WHEN a.b_cents + 100 * a.n_upd - a.del_cents_final
-                 = f.f_cents THEN 1 ELSE 0 END AS cents_match
-FROM agg a JOIN full_v f USING (status)
-"""
-
-
-@_register_r4("q_ivm_audit", _IVM_SQL)
-def q_ivm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental view maintenance audit — the algebra that lets a
-    materialized SUM/COUNT view absorb a CDC delta without rereading
-    the base table, PROVEN against full recompute in the same query:
-    under q_cdc_apply's md5 delta (6/16 updated +$1, 2/16 deleted) the
-    incremental update is dCount = -n_del and dSum = +100*n_upd -
-    del_cents_final — n_upd counts ALL updates because an
-    updated-then-deleted row's +100 is applied by the update delta and
-    then removed inside its last-value departure; the first draft used
-    only live updates and the replica caught the exact 100*n_upd_del
-    discrepancy, the classic IVM miscount this audit exists to catch —
-    and the
-    count_match/cents_match columns ship the exact-equality verdict
-    in-row. At 10^12 rows this identity is the difference between a
-    5-second view refresh and a full-table rescan.
-
-    Scale plan: two map-side-combinable groupBys over one projection,
-    a 3-row equi-join; no windows, no corpus joins."""
-    orders = load(spark, sf_dir, "orders")
-    base = orders.select(
-        F.col("o_orderstatus").alias("status"),
-        F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long").alias("cents"),
-        (
-            F.substring(
-                F.md5(F.concat(F.lit("u:"), F.col("o_orderkey").cast("string"))),
-                1, 1,
-            )
-            < "6"
-        ).alias("upd"),
-        (
-            F.substring(
-                F.md5(F.concat(F.lit("d:"), F.col("o_orderkey").cast("string"))),
-                1, 1,
-            )
-            < "2"
-        ).alias("del"),
-    )
-    full_v = base.filter(~F.col("del")).groupBy("status").agg(
-        F.count(F.lit(1)).cast("long").alias("f_count"),
-        F.sum(
-            F.when(F.col("upd"), F.col("cents") + 100).otherwise(F.col("cents"))
-        )
-        .cast("long")
-        .alias("f_cents"),
-    )
-    agg = base.groupBy("status").agg(
-        F.count(F.lit(1)).cast("long").alias("b_count"),
-        F.sum("cents").cast("long").alias("b_cents"),
-        F.count(F.when(F.col("del"), 1)).cast("long").alias("n_del"),
-        F.count(F.when(F.col("upd"), 1)).cast("long").alias("n_upd"),
-        F.sum(
-            F.when(
-                F.col("del"),
-                F.col("cents") + F.when(F.col("upd"), 100).otherwise(0),
-            ).otherwise(0)
-        )
-        .cast("long")
-        .alias("del_cents_final"),
-    )
-    i_count = F.col("b_count") - F.col("n_del")
-    i_cents = F.col("b_cents") + 100 * F.col("n_upd") - F.col(
-        "del_cents_final"
-    )
-    return agg.join(full_v, "status").select(
-        "status", "b_count", "b_cents", "n_del", "n_upd",
-        "del_cents_final",
-        i_count.cast("long").alias("i_count"),
-        i_cents.cast("long").alias("i_cents"),
-        "f_count", "f_cents",
-        F.when(i_count == F.col("f_count"), 1).otherwise(0).alias("count_match"),
-        F.when(i_cents == F.col("f_cents"), 1).otherwise(0).alias("cents_match"),
-    )
-
-
-_BOTTOMK_SQL = """
-WITH h AS (
-  SELECT o_orderkey AS k, CAST(o_orderkey % 8 AS BIGINT) AS shard,
-         md5('bk:' || CAST(o_orderkey AS VARCHAR)) AS hash
-  FROM orders
-),
-shard_bk AS (
-  SELECT shard, k, hash,
-         row_number() OVER (PARTITION BY shard ORDER BY hash, k) AS srk
-  FROM h QUALIFY srk <= 16
-),
-merged AS (
-  SELECT shard, k, hash,
-         row_number() OVER (ORDER BY hash, k) AS rk
-  FROM shard_bk QUALIFY rk <= 16
-),
-direct AS (
-  SELECT k, hash, row_number() OVER (ORDER BY hash, k) AS rk
-  FROM h QUALIFY rk <= 16
-)
-SELECT m.rk AS rank, m.hash AS merged_hash, d.hash AS direct_hash,
-       m.k AS merged_key, d.k AS direct_key, m.shard AS from_shard,
-       CASE WHEN m.hash = d.hash AND m.k = d.k THEN 1 ELSE 0 END AS match
-FROM merged m JOIN direct d ON d.rk = m.rk
-"""
-
-
-@_register_r4("q_bottomk_merge", _BOTTOMK_SQL)
-def q_bottomk_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bottom-k mergeability certificate (the property that makes KMV /
-    bottom-k sketches distributed-sound, Cohen-Kaplan 2007): every shard
-    keeps its own 16 smallest md5 hashes, the 8 shard summaries union
-    into 128 rows, and the global bottom-16 of THAT must equal the
-    bottom-16 computed directly over all keys — true by the subset
-    argument (a shard's contribution to the global bottom-16 is always
-    inside its own bottom-16), and shipped here rank by rank with the
-    per-rank match flag and the origin shard, because this identity is
-    what licenses tree-reduce aggregation of distinct-count sketches
-    with NO accuracy loss. Ties pinned by key; all comparisons exact
-    string/integer.
-
-    Scale plan: the shard pass is one per-shard window (parallel by
-    construction); the merge ranks a 128-row frame; the direct pass is
-    the audit-only baseline (production never runs it — that is the
-    point)."""
-    orders = load(spark, sf_dir, "orders")
-    h = orders.select(
-        F.col("o_orderkey").alias("k"),
-        (F.col("o_orderkey") % 8).cast("long").alias("shard"),
-        F.md5(F.concat(F.lit("bk:"), F.col("o_orderkey").cast("string"))).alias(
-            "hash"
-        ),
-    )
-    ws = Window.partitionBy("shard").orderBy("hash", "k")
-    shard_bk = h.select(
-        "shard", "k", "hash", F.row_number().over(ws).alias("srk")
-    ).filter(F.col("srk") <= 16)
-    wm = Window.orderBy("hash", "k")
-    merged = shard_bk.select(
-        "shard", "k", "hash", F.row_number().over(wm).alias("rk")
-    ).filter(F.col("rk") <= 16)
-    direct = h.select(
-        F.col("k").alias("dk"), F.col("hash").alias("dhash"),
-        F.row_number().over(wm).alias("rk"),
-    ).filter(F.col("rk") <= 16)
-    return merged.join(direct, "rk").select(
-        F.col("rk").alias("rank"),
-        F.col("hash").alias("merged_hash"),
-        F.col("dhash").alias("direct_hash"),
-        F.col("k").alias("merged_key"),
-        F.col("dk").alias("direct_key"),
-        F.col("shard").alias("from_shard"),
-        F.when(
-            (F.col("hash") == F.col("dhash")) & (F.col("k") == F.col("dk")), 1
-        )
-        .otherwise(0)
-        .alias("match"),
     )
 
 
@@ -17146,122 +14606,9 @@ def q_mix_rate_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round 4: reliability/assignment trio — ring-topology percolation with
-# closed-form arc components, distributed maximal matching by priority
-# rounds, and per-minute load-shedding fairness.
+# Round 4: assignment/shedding pair — distributed maximal matching by
+# priority rounds, and per-minute load-shedding fairness.
 # --------------------------------------------------------------------------
-
-_RING_SQL = """
-WITH nodes AS (SELECT CAST(t.i AS BIGINT) AS pos FROM unnest(range(256)) AS t(i)),
-rates AS (SELECT CAST(r.r AS BIGINT) AS thr FROM (VALUES (1), (2), (4), (8))
-          AS r(r)),
-links AS (
-  SELECT rt.thr, n.pos,
-         CASE WHEN ('0x' || substr(md5('lnk:' || CAST(rt.thr AS VARCHAR)
-                || ':' || CAST(n.pos AS VARCHAR)), 1, 1))::BIGINT < rt.thr
-              THEN 1 ELSE 0 END AS failed
-  FROM nodes n CROSS JOIN rates rt
-),
-fails AS (
-  SELECT thr, pos,
-         row_number() OVER (PARTITION BY thr ORDER BY pos) AS fk,
-         count(*) OVER (PARTITION BY thr) AS n_failed,
-         lead(pos) OVER (PARTITION BY thr ORDER BY pos) AS next_pos,
-         min(pos) OVER (PARTITION BY thr) AS first_pos
-  FROM links WHERE failed = 1
-),
-segs AS (
-  SELECT thr, n_failed,
-         CASE WHEN next_pos IS NOT NULL THEN next_pos - pos - 1
-              ELSE 256 - pos - 1 + first_pos END AS seg_len
-  FROM fails
-)
-SELECT s.thr,
-       round(CAST(s.thr AS DOUBLE) / 16, 4) AS fail_rate,
-       CAST(max(s.n_failed) AS BIGINT) AS n_failed_links,
-       CAST(count(*) AS BIGINT) AS n_segments,
-       CAST(max(s.seg_len) AS BIGINT) AS largest_segment,
-       CAST(count(CASE WHEN s.seg_len = 0 THEN 1 END) AS BIGINT)
-         AS n_isolated,
-       CAST(sum(s.seg_len) AS BIGINT) AS nodes_alive,
-       round(CAST(sum(s.seg_len) AS DOUBLE) / count(*), 6) AS mean_segment
-FROM segs s
-GROUP BY s.thr
-"""
-
-
-@_register_r4("q_ring_reliability", _RING_SQL)
-def q_ring_reliability(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ring-topology percolation (the SONET / chain-replication failure
-    analysis): 256 nodes on a ring where link i (between node i and
-    i+1 mod 256) fails independently at md5 rates 1/16 .. 8/16, and the
-    CLOSED FORM does all the work — k failed links cut the ring into
-    exactly k arcs, so components need NO iterative label propagation:
-    one lead() window over the failed positions gives every arc length
-    (the wrap-around arc closes via the circular first-failure carry),
-    the largest surviving segment is the availability headline,
-    zero-length arcs are nodes isolated by BOTH adjacent links failing,
-    and sum(seg_len) + n_failed = 256 conserves nodes (arcs here count
-    interior nodes strictly between failures). The rate ladder shows
-    the reliability curve collapse: mean segment ~ 16/rate - 1.
-
-    Scale plan: the whole computation is a per-rate window over the
-    FAILED positions only (rate x 256 frame); the 4-row rate spine is
-    broadcast (whitelisted). No graph iteration anywhere — topology
-    knowledge replaced O(diameter) rounds with one window."""
-    nodes = spark.range(256).select(F.col("id").cast("long").alias("pos"))
-    rates = spark.createDataFrame([(1,), (2,), (4,), (8,)], "thr long")
-    links = nodes.crossJoin(F.broadcast(rates)).select(
-        "thr", "pos",
-        F.when(
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("lnk:"), F.col("thr").cast("string"),
-                            F.lit(":"), F.col("pos").cast("string"),
-                        )
-                    ),
-                    1, 1,
-                ),
-                16, 10,
-            ).cast("long")
-            < F.col("thr"),
-            1,
-        )
-        .otherwise(0)
-        .alias("failed"),
-    )
-    wp = Window.partitionBy("thr").orderBy("pos")
-    wa = Window.partitionBy("thr")
-    fails = links.filter(F.col("failed") == 1).select(
-        "thr", "pos",
-        F.count(F.lit(1)).over(wa).alias("n_failed"),
-        F.lead("pos").over(wp).alias("next_pos"),
-        F.min("pos").over(wa).alias("first_pos"),
-    )
-    segs = fails.select(
-        "thr", "n_failed",
-        F.when(
-            F.col("next_pos").isNotNull(), F.col("next_pos") - F.col("pos") - 1
-        )
-        .otherwise(256 - F.col("pos") - 1 + F.col("first_pos"))
-        .alias("seg_len"),
-    )
-    return segs.groupBy("thr").agg(
-        F.round(F.col("thr").cast("double") / 16, 4).alias("fail_rate"),
-        F.max("n_failed").cast("long").alias("n_failed_links"),
-        F.count(F.lit(1)).cast("long").alias("n_segments"),
-        F.max("seg_len").cast("long").alias("largest_segment"),
-        F.count(F.when(F.col("seg_len") == 0, 1)).cast("long").alias("n_isolated"),
-        F.sum("seg_len").cast("long").alias("nodes_alive"),
-        F.round(F.sum("seg_len").cast("double") / F.count(F.lit(1)), 6).alias(
-            "mean_segment"
-        ),
-    ).select(
-        "thr", "fail_rate", "n_failed_links", "n_segments", "largest_segment",
-        "n_isolated", "nodes_alive", "mean_segment",
-    )
 
 
 def _matching_sql() -> str:
@@ -18407,177 +15754,9 @@ def q_rebalance_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round 4: failure-domain trio — dependency-cascade blast radius,
-# TTL-jitter stampede flattening, and the read-your-writes staleness
-# ledger.
+# Round 4: failure-domain pair — TTL-jitter stampede flattening and the
+# read-your-writes staleness ledger.
 # --------------------------------------------------------------------------
-
-
-def _cascade_sql() -> str:
-    blocks = []
-    prev = "st0c"
-    for r in range(1, 8):
-        blocks.append(
-            f"""
-agg{r} AS MATERIALIZED (
-  SELECT e.dst AS task,
-         CAST(count(*) AS BIGINT) AS n_preds,
-         CAST(sum(CASE WHEN p.failed = 1 THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_fp
-  FROM cedges e JOIN {prev} p ON p.task = e.src
-  GROUP BY 1
-),
-st{r}c AS MATERIALIZED (
-  SELECT s.task,
-         CAST(CASE WHEN s.failed = 1 THEN 1
-              WHEN coalesce(a.n_preds, 0) > 0
-                   AND 2 * coalesce(a.n_fp, 0) >= a.n_preds THEN 1
-              ELSE 0 END AS BIGINT) AS failed,
-         CASE WHEN s.failed = 1 THEN s.fail_round
-              WHEN coalesce(a.n_preds, 0) > 0
-                   AND 2 * coalesce(a.n_fp, 0) >= a.n_preds THEN {r}
-              ELSE NULL END AS fail_round
-  FROM {prev} s LEFT JOIN agg{r} a USING (task)
-)""".strip()
-        )
-        prev = f"st{r}c"
-    return ",\n".join(blocks)
-
-
-_CASCADE_SQL = f"""
-WITH ctasks AS (
-  SELECT CAST(t.i AS BIGINT) AS task FROM unnest(range(64)) AS t(i)
-),
-cedges AS MATERIALIZED (
-  SELECT a.task AS src, b.task AS dst
-  FROM ctasks a JOIN ctasks b ON b.task // 8 = a.task // 8 + 1
-  WHERE substr(md5('e:' || CAST(a.task AS VARCHAR) || '-'
-               || CAST(b.task AS VARCHAR)), 1, 1) < '6'
-),
-st0c AS (
-  SELECT task,
-         CAST(CASE WHEN task < 8 AND substr(md5('f0:'
-                || CAST(task AS VARCHAR)), 1, 1) < '4' THEN 1 ELSE 0 END
-              AS BIGINT) AS failed,
-         CASE WHEN task < 8 AND substr(md5('f0:'
-                || CAST(task AS VARCHAR)), 1, 1) < '4' THEN 0 END
-           AS fail_round
-  FROM ctasks
-),
-{_cascade_sql()},
-fin AS (
-  SELECT s.task, CAST(s.task // 8 AS BIGINT) AS layer, s.failed,
-         CAST(s.fail_round AS BIGINT) AS fail_round
-  FROM st7c s
-),
-tot AS (
-  SELECT CAST(sum(failed) AS BIGINT) AS n_failed,
-         CAST(count(*) AS BIGINT) AS n_tasks
-  FROM fin
-)
-SELECT f.task, f.layer, f.failed, f.fail_round,
-       t.n_failed, t.n_tasks,
-       round(CAST(t.n_failed AS DOUBLE) / t.n_tasks, 6) AS blast_radius
-FROM fin f CROSS JOIN tot t
-"""
-
-
-@_register_r4("q_cascade_failure", _CASCADE_SQL)
-def q_cascade_failure(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dependency-cascade blast radius over q_critical_path's layered
-    64-task DAG — the incident-model question 'if a quarter of the
-    sources go down, how much of the pipeline follows': md5 seeds fail
-    25% of layer-0 tasks, and each propagation round a task fails iff a
-    MAJORITY of its predecessors have failed (2*failed_preds >= n_preds
-    — the threshold-cascade model of Watts 2002; strictly weaker than
-    any-pred failure, so survivors with one healthy majority input
-    firewall the cascade). Seven unrolled rounds reach the fixpoint by
-    the layer bound; each task ships its layer, final state, and FIRST
-    failure round (seeds at round 0, honest NULL for survivors), with
-    the blast-radius fraction carried in-row. The replica replays the
-    cascade and asserts monotonicity (failures only grow) and that the
-    round number equals the earliest majority round.
-
-    Scale plan: each round is one edge equi-join + majority groupBy on
-    a metadata-sized frame (the Pregel threshold-propagation shape);
-    DuckDB rounds AS MATERIALIZED against per-reference CTE
-    re-evaluation — the q_greedy_matching lesson applied up front."""
-    tasks = spark.range(64).select(F.col("id").cast("long").alias("task"))
-    a = tasks.select(F.col("task").alias("src"))
-    b = tasks.select(F.col("task").alias("dst"))
-    edges = (
-        a.crossJoin(b)
-        .filter(F.floor(F.col("dst") / 8) == F.floor(F.col("src") / 8) + 1)
-        .filter(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("e:"), F.col("src").cast("string"), F.lit("-"),
-                        F.col("dst").cast("string"),
-                    )
-                ),
-                1, 1,
-            )
-            < "6"
-        )
-        .localCheckpoint()
-    )
-    seed = (F.col("task") < 8) & (
-        F.substring(
-            F.md5(F.concat(F.lit("f0:"), F.col("task").cast("string"))), 1, 1
-        )
-        < "4"
-    )
-    st = tasks.select(
-        "task",
-        F.when(seed, 1).otherwise(0).cast("long").alias("failed"),
-        F.when(seed, 0).cast("long").alias("fail_round"),
-    )
-    for r in range(1, 8):
-        agg = (
-            edges.join(
-                st.select(F.col("task").alias("src"), F.col("failed").alias("pf")),
-                "src",
-            )
-            .groupBy(F.col("dst").alias("task"))
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_preds"),
-                F.sum("pf").cast("long").alias("n_fp"),
-            )
-        )
-        newly = (F.coalesce(F.col("n_preds"), F.lit(0)) > 0) & (
-            2 * F.coalesce(F.col("n_fp"), F.lit(0)) >= F.col("n_preds")
-        )
-        st = (
-            st.join(agg, "task", "left")
-            .select(
-                "task",
-                F.when(F.col("failed") == 1, 1)
-                .when(newly, 1)
-                .otherwise(0)
-                .cast("long")
-                .alias("failed"),
-                F.when(F.col("failed") == 1, F.col("fail_round"))
-                .when(newly, F.lit(r))
-                .cast("long")
-                .alias("fail_round"),
-            )
-            .localCheckpoint()
-        )
-    fin = st.select(
-        "task", F.floor(F.col("task") / 8).cast("long").alias("layer"),
-        "failed", "fail_round",
-    )
-    tot = fin.agg(
-        F.sum("failed").cast("long").alias("n_failed"),
-        F.count(F.lit(1)).cast("long").alias("n_tasks"),
-    )
-    return fin.crossJoin(F.broadcast(tot)).select(
-        "task", "layer", "failed", "fail_round", "n_failed", "n_tasks",
-        F.round(
-            F.col("n_failed").cast("double") / F.col("n_tasks"), 6
-        ).alias("blast_radius"),
-    )
 
 
 _TTLJITTER_SQL = """

@@ -26,13 +26,6 @@ SCRUB_RULES: list[tuple[str, str]] = [
 ]
 
 
-def scrub_text(col: Column, rules: list[tuple[str, str]] | None = None) -> Column:
-    out = col
-    for pat, repl in rules or SCRUB_RULES:
-        out = F.regexp_replace(out, pat, repl)
-    return out
-
-
 def count_matches(col: Column, pattern: str) -> Column:
     return F.size(F.regexp_extract_all(col, F.lit(pattern), F.lit(0))).cast("bigint")
 

@@ -212,48 +212,6 @@ def test_compaction_plan_partitioned_window_has_no_global_sort(spark):
     assert "SinglePartition" not in s, s
 
 
-def test_bucketed_join_has_no_exchange_and_matches_plain_join(spark):
-    """Bucketed co-located join: two tables written bucketed on conv_id with
-    the same bucket count must equi-join with ZERO Exchange in the physical
-    plan (the shuffle was pre-paid at write time), and produce exactly the
-    plain-join rows. This is the repeated-join strategy at 100 TB: bucket the
-    transcript and mention tables once, never shuffle either again."""
-    from cliner_spark.maintenance import write_bucketed
-
-    turns = spark.createDataFrame(
-        [(f"c{i % 11}", i, f"turn text {i}") for i in range(200)],
-        "conv_id string, turn_idx int, text string",
-    )
-    mentions = spark.createDataFrame(
-        [(f"c{i % 11}", i % 7, f"m{i}") for i in range(80)],
-        "conv_id string, turn_idx int, mention string",
-    )
-    write_bucketed(turns, "bkt_turns", "conv_id", n_buckets=8, sort_cols=["turn_idx"])
-    write_bucketed(mentions, "bkt_mentions", "conv_id", n_buckets=8)
-    try:
-        bt = spark.table("bkt_turns")
-        bm = spark.table("bkt_mentions").withColumnRenamed("turn_idx", "m_turn_idx")
-        # merge hint: at test scale AQE would (correctly) pick broadcast; the
-        # property under test is the BUCKETED SMJ shape, i.e. what the plan
-        # degrades to at 100 TB where neither side broadcasts
-        j = bt.hint("merge").join(bm, "conv_id").select("conv_id", "turn_idx", "mention")
-        s = plan(j)
-        assert "Exchange" not in s, s
-        assert "SortMergeJoin" in s, s
-        got = sorted(tuple(r) for r in j.collect())
-        want = sorted(
-            tuple(r)
-            for r in turns.hint("merge")
-            .join(mentions.withColumnRenamed("turn_idx", "m_turn_idx"), "conv_id")
-            .select("conv_id", "turn_idx", "mention")
-            .collect()
-        )
-        assert got == want and len(got) > 0
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bkt_turns")
-        spark.sql("DROP TABLE IF EXISTS bkt_mentions")
-
-
 def test_aqe_splits_skewed_join_partition(spark):
     """Runtime skew evidence: a hot-key fact joined to a dim under AQE with
     skew-join enabled must execute as SortMergeJoin(skew=true) reading an
@@ -379,11 +337,8 @@ def test_runtime_bloom_filter_injected_on_probe_side(spark, tmp_path):
                 spark.conf.set(k, v)
 
 
-def test_plan_lint_global_window_detector():
-    """tools/plan_lint.count_global_windows: flags ordered windows with no
-    partition spec and empty OVER() windows; ignores partitioned windows
-    (ordered or not). Canned lines taken from real Spark 4 executedPlan
-    output."""
+def _plan_lint():
+    import importlib
     import os
     import sys
 
@@ -391,9 +346,15 @@ def test_plan_lint_global_window_detector():
         0,
         os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"),
     )
-    import importlib
+    return importlib.import_module("plan_lint")
 
-    pl = importlib.import_module("plan_lint")
+
+def test_plan_lint_global_window_detector():
+    """tools/plan_lint.count_global_windows: flags ordered windows with no
+    partition spec and empty OVER() windows; ignores partitioned windows
+    (ordered or not). Canned lines taken from real Spark 4 executedPlan
+    output."""
+    pl = _plan_lint()
     global_ordered = (
         "+- Window [row_number() windowspecdefinition(id#0L ASC NULLS FIRST,"
         " specifiedwindowframe(RowFrame, unboundedpreceding$(),"
@@ -419,3 +380,48 @@ def test_plan_lint_global_window_detector():
     assert pl.count_global_windows(empty_over) == 1
     both = "\n".join([global_ordered, partitioned_ordered, empty_over])
     assert pl.count_global_windows(both) == 2
+
+
+def test_plan_lint_rejects_stale_whitelist_entries():
+    """Every ALLOWED / ALLOWED_GLOBAL_WINDOW / frozen-count entry names a
+    registered query, and plan_lint.stale_entries reports one that does not
+    (a deleted query or a planted name), so the lint exits 1 on it."""
+    import json
+
+    import __spark_entry__ as entry
+
+    pl = _plan_lint()
+    with open(pl.COUNTS_PATH) as f:
+        frozen = json.load(f)
+    registered = entry.queries()
+    assert pl.stale_entries(registered, frozen) == []
+    planted = {**frozen, "q_not_registered": {"GlobalWindow": 1}}
+    assert pl.stale_entries(registered, planted) == ["q_not_registered"]
+    whitelisted = sorted(pl.ALLOWED)[0]
+    remaining = [n for n in registered if n != whitelisted]
+    assert pl.stale_entries(remaining, frozen) == [whitelisted]
+
+
+def test_window_lists_name_registered_queries():
+    """ordered_registry() reorders REGISTRY without adding or dropping a
+    query, every name pinned by the window lists is registered, and
+    every oracle_sql() twin belongs to a queries() entry."""
+    import __spark_entry__ as entry
+    from cliner_spark import entry_queries as EQ
+    from cliner_spark import queries_r3, queries_r4, queries_r5
+
+    ordered = EQ.ordered_registry()
+    assert sorted(ordered) == sorted(EQ.REGISTRY)
+    assert all(ordered[n] is EQ.REGISTRY[n] for n in ordered)
+    for names in (
+        EQ.DRIVER_CHECKED_R123,
+        EQ.DRIVER_CHECKED_R4,
+        EQ.DRIVER_RECERTIFY,
+        EQ.ROTATION_FORCED,
+        EQ.DRIVER_PRIORITY,
+        queries_r3.R3_NAMES,
+        queries_r4.R4_NAMES,
+        queries_r5.R5_NAMES,
+    ):
+        assert set(names) <= set(EQ.REGISTRY), sorted(set(names) - set(EQ.REGISTRY))
+    assert set(entry.oracle_sql()) <= set(entry.queries())

@@ -142,98 +142,6 @@ def test_lexical_diversity_matches_python(spark, tmp_path):
         assert math.isclose(got[d][3], exp[3], abs_tol=1e-9)
 
 
-def test_tpch_q17_exact_rewrite_matches_float_semantics(spark, tmp_path):
-    """The decimal cross-multiplication qty*cnt*5 < sum_qty must select the
-    same lines as the textbook l_quantity < 0.2*avg(l_quantity) when
-    quantities are integers (the testdata's shape)."""
-    rng = random.Random(5)
-    rows = []
-    for ok in range(200):
-        pk = rng.randint(0, 15)
-        rows.append(
-            {
-                "l_orderkey": ok,
-                "l_partkey": pk,
-                "l_quantity": float(rng.randint(1, 50)),
-                "l_extendedprice": round(rng.uniform(10, 1000), 2),
-            }
-        )
-    li = spark.createDataFrame(rows)
-    pq = li.groupBy("l_partkey").agg(
-        F.sum(F.col("l_quantity").cast("decimal(38,4)")).alias("sum_qty"),
-        F.count(F.lit(1)).alias("cnt"),
-    )
-    sel = (
-        li.join(pq.withColumnRenamed("l_partkey", "_pk"), F.col("l_partkey") == F.col("_pk"))
-        .filter(F.col("l_quantity").cast("decimal(38,4)") * F.col("cnt") * 5 < F.col("sum_qty"))
-        .select("l_orderkey")
-        .collect()
-    )
-    got = sorted(r["l_orderkey"] for r in sel)
-    # python float oracle
-    from collections import defaultdict
-
-    qty = defaultdict(list)
-    for r in rows:
-        qty[r["l_partkey"]].append(r["l_quantity"])
-    exp = sorted(
-        r["l_orderkey"]
-        for r in rows
-        if r["l_quantity"] < 0.2 * (sum(qty[r["l_partkey"]]) / len(qty[r["l_partkey"]]))
-    )
-    assert got == exp
-
-
-def test_tpch_q21_semi_anti_matches_bruteforce(spark):
-    """LEFT SEMI ('another supplier exists') + LEFT ANTI ('no other supplier
-    returned') against a brute-force per-order Python scan."""
-    rng = random.Random(3)
-    lines = []
-    for ok in range(120):
-        supps = rng.sample(range(10), rng.randint(1, 3))
-        for sk in supps:
-            for _ in range(rng.randint(1, 2)):
-                lines.append(
-                    {
-                        "l_orderkey": ok,
-                        "l_suppkey": sk,
-                        "l_returnflag": rng.choice(["R", "N", "A"]),
-                    }
-                )
-    li = spark.createDataFrame(lines)
-    l1 = li.filter(F.col("l_returnflag") == "R").select("l_orderkey", "l_suppkey")
-    pairs = li.select(F.col("l_orderkey").alias("p_ok"), F.col("l_suppkey").alias("p_sk")).distinct()
-    rpairs = (
-        li.filter(F.col("l_returnflag") == "R")
-        .select(F.col("l_orderkey").alias("r_ok"), F.col("l_suppkey").alias("r_sk"))
-        .distinct()
-    )
-    cand = l1.join(
-        pairs, (l1.l_orderkey == pairs.p_ok) & (l1.l_suppkey != pairs.p_sk), "left_semi"
-    ).join(
-        rpairs, (l1.l_orderkey == rpairs.r_ok) & (l1.l_suppkey != rpairs.r_sk), "left_anti"
-    )
-    got = sorted((r["l_orderkey"], r["l_suppkey"]) for r in cand.collect())
-
-    from collections import defaultdict
-
-    by_order = defaultdict(list)
-    for r in lines:
-        by_order[r["l_orderkey"]].append(r)
-    exp = []
-    for ok, ls in by_order.items():
-        supps = {r["l_suppkey"] for r in ls}
-        rsupps = {r["l_suppkey"] for r in ls if r["l_returnflag"] == "R"}
-        for r in ls:
-            if (
-                r["l_returnflag"] == "R"
-                and len(supps - {r["l_suppkey"]}) > 0
-                and len(rsupps - {r["l_suppkey"]}) == 0
-            ):
-                exp.append((r["l_orderkey"], r["l_suppkey"]))
-    assert got == sorted(exp)
-
-
 def test_ssjoin_prefix_matches_naive_allpairs(spark):
     """Prefix-filter ssjoin is EXACT: equals the brute-force thresholded
     all-pairs join on a random corpus with heavy shared shingles."""

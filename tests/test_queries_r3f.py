@@ -487,32 +487,6 @@ def test_pseudonymize_matches_python_replica(spark):
     assert sum(r["n_entities"] for r in rows.values()) == len(ents)
 
 
-def test_fk_integrity_matches_python_replica(spark):
-    li = spark.read.parquet(f"{SF}/lineitem.parquet").select(
-        "l_orderkey", "l_partkey", "l_suppkey"
-    ).collect()
-    okeys = {r["o_orderkey"] for r in spark.read.parquet(f"{SF}/orders.parquet").select("o_orderkey").collect()}
-    pkeys = {r["p_partkey"] for r in spark.read.parquet(f"{SF}/part.parquet").select("p_partkey").collect()}
-    skeys = {r["s_suppkey"] for r in spark.read.parquet(f"{SF}/supplier.parquet").select("s_suppkey").collect()}
-    rows = {r["fk"]: r for r in _q(spark, "q_fk_integrity").collect()}
-    assert len(rows) == 5
-    r = rows["lineitem.l_orderkey->orders"]
-    orphans = [x["l_orderkey"] for x in li if x["l_orderkey"] not in okeys]
-    assert (r["n_rows"], r["n_orphans"], r["n_orphan_keys"]) == (
-        len(li), len(orphans), len(set(orphans))
-    )
-    r = rows["lineitem.l_partkey->part"]
-    orphans = [x["l_partkey"] for x in li if x["l_partkey"] not in pkeys]
-    assert (r["n_rows"], r["n_orphans"], r["n_orphan_keys"]) == (
-        len(li), len(orphans), len(set(orphans))
-    )
-    r = rows["lineitem.l_suppkey->supplier"]
-    orphans = [x["l_suppkey"] for x in li if x["l_suppkey"] not in skeys]
-    assert (r["n_rows"], r["n_orphans"], r["n_orphan_keys"]) == (
-        len(li), len(orphans), len(set(orphans))
-    )
-
-
 # ---------------------------------------------------------------------------
 # batch 19: CUSUM changepoint + Benford audit
 # ---------------------------------------------------------------------------
@@ -548,25 +522,6 @@ def test_cusum_changepoint_matches_python_replica(spark):
     assert peaks == [peak]
     # telescoping invariant: cusum_num ends at exactly 0 (n*T - n*T)
     assert rows[-1]["cusum_num"] == 0
-
-
-def test_benford_audit_matches_python_replica(spark):
-    od = spark.read.parquet(f"{SF}/orders.parquet").select("o_totalprice").collect()
-    from collections import Counter
-
-    cnt = Counter()
-    for r in od:
-        p = r["o_totalprice"]
-        if p is None or p <= 0:
-            continue
-        cents = int(round(p * 100))
-        cnt[int(str(cents)[0])] += 1
-    rows = {r["digit"]: r for r in _q(spark, "q_benford_audit").collect()}
-    assert set(rows) == set(cnt)
-    total = sum(cnt.values())
-    for d, r in rows.items():
-        assert r["n_orders"] == cnt[d]
-        assert r["n_total"] == total
 
 
 # ---------------------------------------------------------------------------

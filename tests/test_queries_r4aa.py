@@ -1,6 +1,6 @@
-"""Independent-oracle replica tests for the allocation/privacy/segmentation
-batch (q_kanonymity_audit / q_binary_segmentation / q_stable_matching),
-incl. a stability (no-blocking-pair) proof at fixpoint."""
+"""Independent-oracle replica tests for the segmentation/allocation
+batch (q_binary_segmentation / q_stable_matching), incl. a stability
+(no-blocking-pair) proof at fixpoint."""
 
 from __future__ import annotations
 
@@ -18,32 +18,6 @@ ROUNDS = 6
 
 def _md5(s: str) -> str:
     return hashlib.md5(s.encode()).hexdigest()
-
-
-def test_kanonymity_matches_replica(spark):
-    rows_c = duckdb.sql(
-        f"SELECT c_mktsegment, c_nationkey, c_acctbal >= 0 "
-        f"FROM read_parquet('{SF}/customer.parquet')"
-    ).fetchall()
-    groups = defaultdict(lambda: [0, set()])
-    for seg, nat, sens in rows_c:
-        g = groups[(seg, nat)]
-        g[0] += 1
-        g[1].add(sens)
-    n_rows = len(rows_c)
-    min_l = min(len(g[1]) for g in groups.values())
-    got = {r["k"]: r for r in entry.queries()["q_kanonymity_audit"](spark, SF).collect()}
-    assert set(got) == {2, 5, 10}
-    for k in (2, 5, 10):
-        below_g = sum(1 for g in groups.values() if g[0] < k)
-        below_r = sum(g[0] for g in groups.values() if g[0] < k)
-        r = got[k]
-        assert (r["n_rows"], r["n_groups"]) == (n_rows, len(groups))
-        assert (r["groups_below_k"], r["rows_below_k"]) == (below_g, below_r)
-        assert r["min_l"] == min_l
-    # monotone exposure in k, and the audit finds real risk somewhere
-    assert got[2]["rows_below_k"] <= got[5]["rows_below_k"] <= got[10]["rows_below_k"]
-    assert got[10]["rows_below_k"] > 0
 
 
 def test_binary_segmentation_matches_replica(spark):

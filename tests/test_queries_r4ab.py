@@ -1,23 +1,15 @@
-"""Independent-oracle replica tests for the serving/storage-infra batch
-(q_prefix_cache / q_merkle_diff / q_rendezvous_hashing), incl. the HRW
-no-cross-old-movement invariant and the Merkle dirty-path monotonicity."""
+"""Independent-oracle replica test for q_prefix_cache."""
 
 from __future__ import annotations
 
-import hashlib
 import math
-from collections import Counter, defaultdict
+from collections import Counter
 
 import duckdb
 
 import __spark_entry__ as entry
 
 SF = "/root/testdata/sf0.001"
-P = 2_147_483_647
-
-
-def _md5(s: str) -> str:
-    return hashlib.md5(s.encode()).hexdigest()
 
 
 def test_prefix_cache_matches_replica(spark):
@@ -49,99 +41,3 @@ def test_prefix_cache_matches_replica(spark):
         prev_prefixes, prev_docs = r["n_prefixes"], r["n_docs"]
     # the fixture vocab is tiny, so depth-1 sharing must be massive
     assert got[1]["hit_rate"] > 0.5
-
-
-def _merkle_tree(rows):
-    """rows = [(k, cents)]; returns {(level, node): v} over the full spine."""
-    leaf_sum = defaultdict(int)
-    for k, cents in rows:
-        leaf_sum[k % 256] += int(_md5(f"{k}:{cents}")[:12], 16)
-    vals = {8: {n: ((1 + leaf_sum[n]) % P if n in leaf_sum else 0) for n in range(256)}}
-    for lv in range(7, -1, -1):
-        vals[lv] = {
-            n: (2 * vals[lv + 1][2 * n] + 3 * vals[lv + 1][2 * n + 1]) % P
-            for n in range(2**lv)
-        }
-    return vals
-
-
-def test_merkle_diff_matches_replica(spark):
-    orders = duckdb.sql(
-        f"SELECT o_orderkey, CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) "
-        f"FROM read_parquet('{SF}/orders.parquet')"
-    ).fetchall()
-    rows_a, rows_b = [], []
-    n_del = n_mod = 0
-    for k, cents in orders:
-        rows_a.append((k, cents))
-        dn = _md5(f"{k}:d")[0]
-        if dn == "0":
-            n_del += 1
-        elif dn == "1":
-            n_mod += 1
-            rows_b.append((k, cents + 100))
-        else:
-            rows_b.append((k, cents))
-    ta, tb = _merkle_tree(rows_a), _merkle_tree(rows_b)
-    got = {r["level"]: r for r in entry.queries()["q_merkle_diff"](spark, SF).collect()}
-    assert set(got) == set(range(9))
-    prev_diff = None
-    for lv in range(9):
-        diff = sum(1 for n in ta[lv] if ta[lv][n] != tb[lv][n])
-        r = got[lv]
-        assert (r["n_nodes"], r["n_diff"]) == (2**lv, diff)
-        assert (r["n_rows_a"], r["n_deleted"], r["n_modified"]) == (
-            len(rows_a), n_del, n_mod,
-        )
-        # every dirty parent has >= 1 dirty child: diff grows with depth
-        if prev_diff is not None:
-            assert diff >= prev_diff
-        prev_diff = diff
-    assert got[0]["n_diff"] == 1  # the delta is non-empty -> roots disagree
-    assert got[8]["n_diff"] <= n_del + n_mod  # dirty leaves bounded by delta rows
-
-
-def test_rendezvous_hashing_matches_replica(spark):
-    keys = [
-        k for (k,) in duckdb.sql(
-            f"SELECT o_orderkey FROM read_parquet('{SF}/orders.parquet')"
-        ).fetchall()
-    ]
-
-    def hrw(k, n_nodes):
-        return max(range(n_nodes), key=lambda n: _md5(f"{k}#{n}"))
-
-    exp = {}
-    for scheme in ("hrw", "mod"):
-        if scheme == "hrw":
-            pairs = [(hrw(k, 8), hrw(k, 10)) for k in keys]
-        else:
-            pairs = [(k % 8, k % 10) for k in keys]
-        moved = sum(1 for a, b in pairs if a != b)
-        loads = Counter(b for _, b in pairs)
-        exp[scheme] = dict(
-            n_keys=len(keys),
-            n_moved=moved,
-            n_to_new=sum(1 for a, b in pairs if a != b and b >= 8),
-            n_cross_old=sum(1 for a, b in pairs if a != b and b < 8),
-            remap_pct=round(moved / len(keys), 6),
-            max_load10=max(loads.values()),
-            min_load10=min(loads.values()),
-            n_nodes10=len(loads),
-        )
-    got = {
-        r["scheme"]: r
-        for r in entry.queries()["q_rendezvous_hashing"](spark, SF).collect()
-    }
-    assert set(got) == {"hrw", "mod"}
-    for scheme, e in exp.items():
-        r = got[scheme]
-        for col, v in e.items():
-            if col == "remap_pct":
-                assert math.isclose(r[col], v, abs_tol=1e-9)
-            else:
-                assert r[col] == v
-    # the defining HRW invariant: movement only TO the new nodes
-    assert got["hrw"]["n_cross_old"] == 0
-    # and the strawman really is the disaster HRW avoids
-    assert got["mod"]["n_moved"] > 3 * got["hrw"]["n_moved"]

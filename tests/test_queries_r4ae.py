@@ -1,13 +1,10 @@
-"""Independent-oracle replica tests for the experiment-design batch
-(q_power_analysis / q_group_sequential / q_cohens_effects), incl. a
-brute-force O(n^2) Cliff's delta on a sample and the OBF crossing proof
-under the planted lift."""
+"""Independent-oracle replica test for q_group_sequential, incl. the OBF
+crossing proof under the planted lift."""
 
 from __future__ import annotations
 
 import hashlib
 import math
-from collections import defaultdict
 
 import duckdb
 
@@ -18,39 +15,6 @@ SF = "/root/testdata/sf0.001"
 
 def _md5(s: str) -> str:
     return hashlib.md5(s.encode()).hexdigest()
-
-
-def test_power_analysis_matches_replica(spark):
-    rows = duckdb.sql(
-        f"SELECT c_mktsegment, count(CASE WHEN c_acctbal >= 0 THEN 1 END), "
-        f"count(*) FROM read_parquet('{SF}/customer.parquet') GROUP BY 1"
-    ).fetchall()
-    got = defaultdict(dict)
-    for r in entry.queries()["q_power_analysis"](spark, SF).collect():
-        got[r["segment"]][r["delta"]] = r
-    assert set(got) == {s for s, _k, _n in rows}
-    zsum = 1.959964 + 0.841621
-    for s, k, n in rows:
-        assert set(got[s]) == {0.01, 0.02, 0.05}
-        prev_req = None
-        for delta in (0.01, 0.02, 0.05):
-            p1 = k / n
-            p2 = p1 + delta
-            n_req = math.ceil(
-                zsum * zsum * (p1 * (1 - p1) + p2 * (1 - p2)) / (delta * delta)
-            )
-            r = got[s][delta]
-            assert (r["k"], r["n_avail"]) == (k, n)
-            assert r["n_per_arm"] == n_req
-            assert r["feasible"] == (1 if n >= 2 * n_req else 0)
-            assert math.isclose(r["p1"], round(p1, 6), abs_tol=1e-9)
-            # bigger MDE -> smaller experiment, always
-            if prev_req is not None:
-                assert n_req < prev_req
-            prev_req = n_req
-        # a 1pp MDE at ~0.9 baseline needs thousands per arm; tiny fixture
-        # segments cannot host it
-        assert got[s][0.01]["feasible"] == 0
 
 
 def test_group_sequential_matches_replica(spark):
@@ -94,48 +58,3 @@ def test_group_sequential_matches_replica(spark):
     # the planted 2/16 lift must cross the OBF boundary by the late looks
     assert any_reject
     assert got[5]["reject"] == 1
-
-
-def test_cohens_effects_matches_replica(spark):
-    rows = duckdb.sql(
-        f"SELECT c_mktsegment, CAST(floor(c_acctbal) AS BIGINT) "
-        f"FROM read_parquet('{SF}/customer.parquet')"
-    ).fetchall()
-    groups = defaultdict(list)
-    for s, v in rows:
-        groups[s].append(v)
-    allv = [v for _s, v in rows]
-    n_all, s_all = len(allv), sum(allv)
-    ss_all = sum(v * v for v in allv)
-    got = {r["segment"]: r for r in entry.queries()["q_cohens_effects"](spark, SF).collect()}
-    assert set(got) == set(groups)
-    for s, vs in groups.items():
-        n_g, s_g = len(vs), sum(vs)
-        ss_g = sum(v * v for v in vs)
-        n_b, s_b, ss_b = n_all - n_g, s_all - s_g, ss_all - ss_g
-        mean_a, mean_b = s_g / n_g, s_b / n_b
-        ssw = (ss_g - s_g * s_g / n_g) + (ss_b - s_b * s_b / n_b)
-        d = (mean_a - mean_b) / math.sqrt(ssw / (n_all - 2))
-        # brute-force O(n_g * n_b) Cliff's delta
-        others = sorted(v for t, v in rows if t != s)
-        import bisect
-
-        gt = sum(bisect.bisect_left(others, v) for v in vs)
-        lt = sum(len(others) - bisect.bisect_right(others, v) for v in vs)
-        r = got[s]
-        assert (r["n_g"], r["s_g"]) == (n_g, s_g)
-        assert r["cliff_num"] == gt - lt
-        assert r["cliff_den"] == n_g * n_b
-        assert math.isclose(r["cohens_d"], round(d, 6), abs_tol=1e-6)
-        assert math.isclose(
-            r["hedges_g"], round((1 - 3.0 / (4 * (n_all - 2) - 1)) * d, 6),
-            abs_tol=1e-6,
-        )
-        assert math.isclose(
-            r["cliffs_delta"], round((gt - lt) / (n_g * n_b), 6), abs_tol=1e-6
-        )
-        # consistency: d and Cliff's delta agree in sign (both vs the rest)
-        if abs(d) > 0.05:
-            assert (d > 0) == (r["cliff_num"] > 0)
-        # |delta| <= 1 by definition
-        assert abs(r["cliffs_delta"]) <= 1

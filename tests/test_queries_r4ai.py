@@ -1,13 +1,13 @@
 """Independent-oracle replica tests for the distributed-data-systems batch
-(q_cdc_apply / q_delivery_audit / q_crdt_gossip): a sequential CDC fold,
-a message-by-message delivery replay, and a full gossip simulation with
-the log2(n) convergence-bound proof."""
+(q_delivery_audit / q_crdt_gossip): a message-by-message delivery
+replay and a full gossip simulation with the log2(n) convergence-bound
+proof."""
 
 from __future__ import annotations
 
 import hashlib
 import math
-from collections import Counter, defaultdict
+from collections import defaultdict
 
 import duckdb
 
@@ -18,46 +18,6 @@ SF = "/root/testdata/sf0.001"
 
 def _md5(s: str) -> str:
     return hashlib.md5(s.encode()).hexdigest()
-
-
-def test_cdc_apply_matches_replica(spark):
-    rows = duckdb.sql(
-        f"SELECT o_orderkey, o_orderstatus, "
-        f"CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) "
-        f"FROM read_parquet('{SF}/orders.parquet')"
-    ).fetchall()
-    exp = defaultdict(lambda: dict(keys=0, ops=0, live=0, tomb=0, cents=0, upd=0))
-    for k, status, cents in rows:
-        ops = [("insert", cents)]
-        if _md5(f"u:{k}")[0] < "6":
-            ops.append(("update", cents + 100))
-        if _md5(f"d:{k}")[0] < "2":
-            ops.append(("delete", None))
-        last_op, last_val = ops[-1]
-        # LWW arg_max(val, seq) skips NULL values: the delete's NULL never
-        # wins the value slot, but the op slot says tombstone
-        last_nonnull = [v for _o, v in ops if v is not None][-1]
-        e = exp[status]
-        e["keys"] += 1
-        e["ops"] += len(ops)
-        if last_op == "delete":
-            e["tomb"] += 1
-        else:
-            e["live"] += 1
-            e["cents"] += last_nonnull
-            if last_op == "update":
-                e["upd"] += 1
-    got = {r["status"]: r for r in entry.queries()["q_cdc_apply"](spark, SF).collect()}
-    assert set(got) == set(exp)
-    for status, e in exp.items():
-        r = got[status]
-        assert (r["n_keys"], r["n_ops"]) == (e["keys"], e["ops"])
-        assert (r["n_live"], r["n_tombstoned"]) == (e["live"], e["tomb"])
-        assert r["n_superseded"] == e["ops"] - e["keys"]
-        assert r["live_cents"] == e["cents"]
-        assert r["n_live_updated"] == e["upd"]
-        # conservation: every key is live xor tombstoned
-        assert r["n_live"] + r["n_tombstoned"] == r["n_keys"]
 
 
 def test_delivery_audit_matches_replica(spark):

@@ -1,7 +1,5 @@
-"""Independent-oracle replica tests for the query-optimizer batch
-(q_join_cardinality / q_join_order_cost / q_partition_advisor): estimates
-recomputed from raw tables, the FK q-error ~ 1 property, plan-regret
-reconstruction, and partition-metric replay."""
+"""Independent-oracle replica test for q_partition_advisor: partition-metric
+replay from raw tables."""
 
 from __future__ import annotations
 
@@ -13,89 +11,6 @@ import duckdb
 import __spark_entry__ as entry
 
 SF = "/root/testdata/sf0.001"
-
-
-def _one(sql):
-    return duckdb.sql(sql).fetchone()[0]
-
-
-def test_join_cardinality_matches_replica(spark):
-    t = {n: f"read_parquet('{SF}/{n}.parquet')" for n in ("orders", "customer", "lineitem", "part")}
-    edges = {
-        "orders_customer": ("orders", "customer", "o_custkey", "c_custkey"),
-        "lineitem_orders": ("lineitem", "orders", "l_orderkey", "o_orderkey"),
-        "lineitem_part": ("lineitem", "part", "l_partkey", "p_partkey"),
-    }
-    got = {r["join_name"]: r for r in entry.queries()["q_join_cardinality"](spark, SF).collect()}
-    assert set(got) == set(edges)
-    for name, (a, b, ka, kb) in edges.items():
-        na = _one(f"SELECT count(*) FROM {t[a]}")
-        nb = _one(f"SELECT count(*) FROM {t[b]}")
-        da = _one(f"SELECT count(DISTINCT {ka}) FROM {t[a]}")
-        db = _one(f"SELECT count(DISTINCT {kb}) FROM {t[b]}")
-        actual = _one(
-            f"SELECT count(*) FROM {t[a]} a JOIN {t[b]} b ON a.{ka} = b.{kb}"
-        )
-        r = got[name]
-        assert (r["n_left"], r["n_right"], r["d_left"], r["d_right"]) == (na, nb, da, db)
-        assert (r["est_num"], r["est_den"]) == (na * nb, max(da, db))
-        assert r["actual"] == actual
-        est = na * nb / max(da, db)
-        assert math.isclose(r["est_rows"], round(est, 4), abs_tol=1e-6)
-        q = max(est / actual, actual / est)
-        assert math.isclose(r["q_error"], round(q, 6), abs_tol=1e-6)
-        # FK joins under containment: the System-R estimate is near-exact
-        assert r["q_error"] < 1.2
-
-
-def test_join_order_cost_matches_replica(spark):
-    o = f"read_parquet('{SF}/orders.parquet')"
-    c = f"read_parquet('{SF}/customer.parquet')"
-    li = f"read_parquet('{SF}/lineitem.parquet')"
-    n_c, n_o, n_l = (_one(f"SELECT count(*) FROM {x}") for x in (c, o, li))
-    n_of = _one(f"SELECT count(*) FROM {o} WHERE o_orderstatus = 'F'")
-    d_cc = _one(f"SELECT count(DISTINCT c_custkey) FROM {c}")
-    d_oc = _one(f"SELECT count(DISTINCT o_custkey) FROM {o}")
-    d_ok = _one(f"SELECT count(DISTINCT o_orderkey) FROM {o}")
-    d_lk = _one(f"SELECT count(DISTINCT l_orderkey) FROM {li}")
-    a_co = _one(f"SELECT count(*) FROM {c} c JOIN {o} o ON c.c_custkey = o.o_custkey")
-    a_ol = _one(f"SELECT count(*) FROM {o} o JOIN {li} l ON o.o_orderkey = l.l_orderkey")
-    a_col = _one(
-        f"SELECT count(*) FROM {c} c JOIN {o} o ON c.c_custkey = o.o_custkey "
-        f"JOIN {li} l ON o.o_orderkey = l.l_orderkey"
-    )
-    a_ofl = _one(
-        f"SELECT count(*) FROM {o} o JOIN {li} l ON o.o_orderkey = l.l_orderkey "
-        f"WHERE o.o_orderstatus = 'F'"
-    )
-    a_ofcl = _one(
-        f"SELECT count(*) FROM {c} c JOIN {o} o ON c.c_custkey = o.o_custkey "
-        f"JOIN {li} l ON o.o_orderkey = l.l_orderkey WHERE o.o_orderstatus = 'F'"
-    )
-    e_co = n_c * n_o / max(d_cc, d_oc)
-    e_ol = n_o * n_l / max(d_ok, d_lk)
-    e_ofl = n_of * n_l / max(d_ok, d_lk)
-    plans = {
-        "co_then_l": (e_co + e_co * n_l / max(d_ok, d_lk), a_co + a_col),
-        "ol_then_c": (e_ol + e_ol * n_c / max(d_oc, d_cc), a_ol + a_col),
-        "filtered_ofl_then_c": (
-            e_ofl + e_ofl * n_c / max(d_oc, d_cc), a_ofl + a_ofcl,
-        ),
-    }
-    best_actual = min(a for _e, a in plans.values())
-    picked = min(plans, key=lambda p: (plans[p][0], p))
-    got = {r["plan"]: r for r in entry.queries()["q_join_order_cost"](spark, SF).collect()}
-    assert set(got) == set(plans)
-    for p, (e, a) in plans.items():
-        r = got[p]
-        assert math.isclose(r["est_cost"], round(e, 4), abs_tol=1e-6)
-        assert r["actual_cost"] == a
-        assert r["picked"] == (1 if p == picked else 0)
-        assert r["best_actual"] == best_actual
-        assert math.isclose(r["cost_vs_best"], round(a / best_actual, 6), abs_tol=1e-6)
-    # the pushdown plan must be cheapest in BOTH estimate and reality
-    assert picked == "filtered_ofl_then_c"
-    assert got[picked]["cost_vs_best"] == 1.0
 
 
 def test_partition_advisor_matches_replica(spark):

@@ -1,86 +1,16 @@
-"""Independent-oracle replica tests for the relational/scheduling/stat
-batch (q_skyline / q_critical_path / q_cramer_von_mises): an O(n^2)
-dominance scan with the antichain proof, a recursive longest-path CPM
-check with per-edge feasibility, and a Fractions CvM."""
+"""Independent-oracle replica test for q_cramer_von_mises (a Fractions
+CvM)."""
 
 from __future__ import annotations
 
-import hashlib
 import math
-from collections import defaultdict
 from fractions import Fraction
-from functools import lru_cache
 
 import duckdb
 
 import __spark_entry__ as entry
 
 SF = "/root/testdata/sf0.001"
-
-
-def _md5(s: str) -> str:
-    return hashlib.md5(s.encode()).hexdigest()
-
-
-def test_skyline_matches_replica(spark):
-    rows = duckdb.sql(
-        f"SELECT p_partkey, CAST(floor(p_retailprice * 100 + 0.5) AS BIGINT), "
-        f"p_size FROM read_parquet('{SF}/part.parquet')"
-    ).fetchall()
-
-    def dominated(b):
-        _kb, pb, sb = b
-        return any(
-            (pa < pb and sa >= sb) or (pa <= pb and sa > sb)
-            for _ka, pa, sa in rows
-        )
-
-    front = [r for r in rows if not dominated(r)]
-    got = {r["p_partkey"]: r for r in entry.queries()["q_skyline"](spark, SF).collect()}
-    assert set(got) == {k for k, _p, _s in front}
-    for k, p, s in front:
-        assert (got[k]["cents"], got[k]["size"]) == (p, s)
-        assert got[k]["n_total"] == len(rows)
-    # the front is an antichain: no skyline point dominates another
-    for a in front:
-        for b in front:
-            if a is b:
-                continue
-            assert not ((a[1] < b[1] and a[2] >= b[2]) or (a[1] <= b[1] and a[2] > b[2]))
-
-
-def test_critical_path_matches_replica(spark):
-    dur = {t: 1 + int(_md5(f"dur:{t}")[0], 16) for t in range(64)}
-    edges = [
-        (i, j)
-        for i in range(64)
-        for j in range(64)
-        if j // 8 == i // 8 + 1 and _md5(f"e:{i}-{j}")[0] < "6"
-    ]
-    preds = defaultdict(list)
-    for i, j in edges:
-        preds[j].append(i)
-
-    @lru_cache(maxsize=None)
-    def es(t):
-        return max((es(p) + dur[p] for p in preds[t]), default=0)
-
-    got = {r["task"]: r for r in entry.queries()["q_critical_path"](spark, SF).collect()}
-    assert set(got) == set(range(64))
-    makespan = max(es(t) + dur[t] for t in range(64))
-    for t in range(64):
-        r = got[t]
-        assert (r["layer"], r["dur"]) == (t // 8, dur[t])
-        assert r["es"] == es(t), t
-        assert r["ef"] == es(t) + dur[t]
-        assert r["n_preds"] == len(preds[t])
-        assert r["makespan"] == makespan
-        assert r["on_critical_end"] == (1 if es(t) + dur[t] == makespan else 0)
-        # feasibility: a task starts no earlier than every pred's finish
-        for p in preds[t]:
-            assert r["es"] >= got[p]["es"] + dur[p]
-    # at least one critical end exists and it sits in some populated layer
-    assert any(r["on_critical_end"] == 1 for r in got.values())
 
 
 def test_cramer_von_mises_matches_replica(spark):

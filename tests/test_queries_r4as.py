@@ -1,7 +1,7 @@
-"""Independent-oracle replica tests for the reliability/assignment batch
-(q_ring_reliability / q_greedy_matching / q_load_shed_priority): the
-closed-form arc conservation, a full priority-matching replay with the
-no-node-matched-twice proof, and the shedding fairness band."""
+"""Independent-oracle replica tests for the assignment/shedding batch
+(q_greedy_matching / q_load_shed_priority): a full priority-matching
+replay with the no-node-matched-twice proof, and the shedding fairness
+band."""
 
 from __future__ import annotations
 
@@ -18,33 +18,6 @@ SF = "/root/testdata/sf0.001"
 
 def _md5(s: str) -> str:
     return hashlib.md5(s.encode()).hexdigest()
-
-
-def test_ring_reliability_matches_replica(spark):
-    got = {r["thr"]: r for r in entry.queries()["q_ring_reliability"](spark, SF).collect()}
-    assert set(got) == {1, 2, 4, 8}
-    for thr in (1, 2, 4, 8):
-        failed = [
-            p for p in range(256) if int(_md5(f"lnk:{thr}:{p}")[0], 16) < thr
-        ]
-        k = len(failed)
-        segs = []
-        for i, p in enumerate(failed):
-            nxt = failed[i + 1] if i + 1 < len(failed) else failed[0] + 256
-            segs.append(nxt - p - 1)
-        r = got[thr]
-        assert r["n_failed_links"] == k
-        assert r["n_segments"] == k
-        assert r["largest_segment"] == max(segs)
-        assert r["n_isolated"] == sum(1 for s in segs if s == 0)
-        assert r["nodes_alive"] == sum(segs)
-        # conservation: interior nodes + failure endpoints cover the ring
-        assert sum(segs) + k == 256
-        assert math.isclose(
-            r["mean_segment"], round(sum(segs) / k, 6), abs_tol=1e-9
-        )
-    # the reliability collapse: higher failure rate, smaller largest arc
-    assert got[1]["largest_segment"] >= got[8]["largest_segment"]
 
 
 def _edges():

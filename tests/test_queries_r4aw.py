@@ -1,8 +1,6 @@
 """Independent-oracle replica tests for the failure-domain batch
-(q_cascade_failure / q_ttl_jitter / q_read_your_writes): a full
-threshold-cascade replay with earliest-majority-round proof, expiry
-histograms under both TTL policies, and the gap-ledger staleness
-replay."""
+(q_ttl_jitter / q_read_your_writes): expiry histograms under both TTL
+policies, and the gap-ledger staleness replay."""
 
 from __future__ import annotations
 
@@ -19,45 +17,6 @@ SF = "/root/testdata/sf0.001"
 
 def _md5(s: str) -> str:
     return hashlib.md5(s.encode()).hexdigest()
-
-
-def test_cascade_failure_matches_replica(spark):
-    edges = [
-        (i, j)
-        for i in range(64)
-        for j in range(64)
-        if j // 8 == i // 8 + 1 and _md5(f"e:{i}-{j}")[0] < "6"
-    ]
-    preds = defaultdict(list)
-    for i, j in edges:
-        preds[j].append(i)
-    failed = {t: (t < 8 and _md5(f"f0:{t}")[0] < "4") for t in range(64)}
-    fail_round = {t: (0 if failed[t] else None) for t in range(64)}
-    for r in range(1, 8):
-        prev = dict(failed)
-        for t in range(64):
-            if prev[t] or not preds[t]:
-                continue
-            nf = sum(1 for p in preds[t] if prev[p])
-            if 2 * nf >= len(preds[t]):
-                failed[t] = True
-                fail_round[t] = r
-        # monotone: failures only grow
-        assert all(failed[t] or not prev[t] for t in range(64))
-    got = {r["task"]: r for r in entry.queries()["q_cascade_failure"](spark, SF).collect()}
-    assert set(got) == set(range(64))
-    n_failed = sum(1 for t in range(64) if failed[t])
-    for t in range(64):
-        r = got[t]
-        assert r["layer"] == t // 8
-        assert r["failed"] == (1 if failed[t] else 0)
-        assert r["fail_round"] == fail_round[t]
-        assert (r["n_failed"], r["n_tasks"]) == (n_failed, 64)
-    # the seeds really seeded and the cascade reached beyond layer 0
-    assert any(fail_round[t] == 0 for t in range(8))
-    assert math.isclose(
-        got[0]["blast_radius"], round(n_failed / 64, 6), abs_tol=1e-9
-    )
 
 
 def test_ttl_jitter_matches_replica(spark):

@@ -186,40 +186,3 @@ def test_chao1_matches_python_replica(spark):
         # estimator never below the observed richness
         assert r["chao1"] >= r["s_obs"]
         assert 0 <= r["good_coverage"] <= 1
-
-
-def test_fs_linkage_matches_python_replica(spark):
-    cust = duckdb.sql(
-        f"SELECT c_custkey, c_nationkey, c_mktsegment, "
-        f"CAST(round(c_acctbal*100) AS BIGINT) FROM "
-        f"read_parquet('{SF}/customer.parquet')"
-    ).fetchall()
-    by_nat = defaultdict(list)
-    for k, nat, seg, cents in cust:
-        by_nat[nat].append((k, seg, cents))
-    pat = Counter()
-    for nat, rows in by_nat.items():
-        rows.sort()
-        for i in range(len(rows)):
-            for j in range(i + 1, len(rows)):
-                ka, sa, ca = rows[i]
-                kb, sb, cb = rows[j]
-                pat[
-                    (
-                        int(sa == sb),
-                        int(abs(ca - cb) <= 10000),
-                        int((ca < 0) == (cb < 0)),
-                    )
-                ] += 1
-    total = sum(pat.values())
-    got = {
-        (r["seg_agree"], r["bal_agree"], r["credit_agree"]): r
-        for r in _q(spark, "q_fs_linkage").collect()
-    }
-    assert set(got) == set(pat)
-    for p, n in pat.items():
-        r = got[p]
-        assert r["n_pairs"] == n and r["total_pairs"] == total
-        assert abs(r["u_prob"] - n / total) < 2e-6
-    # the fixture must exercise more than one agreement pattern
-    assert len(got) >= 2

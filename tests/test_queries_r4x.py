@@ -1,9 +1,8 @@
 """Independent-oracle replica tests for the analysis-governance batch
-(q_simpson_paradox / q_trimmed_mean / q_runs_test)."""
+(q_trimmed_mean / q_runs_test)."""
 
 from __future__ import annotations
 
-import hashlib
 from collections import defaultdict
 
 import duckdb
@@ -11,51 +10,6 @@ import duckdb
 import __spark_entry__ as entry
 
 SF = "/root/testdata/sf0.001"
-
-
-def _sign(v: int) -> int:
-    return (v > 0) - (v < 0)
-
-
-def test_simpson_paradox_matches_replica(spark):
-    rows_ev = duckdb.sql(
-        f"""SELECT e.user_id, c.c_mktsegment,
-                   max(CASE WHEN e.event_type = 'purchase'
-                            AND round(e.value * 100) >= 15000
-                       THEN 1 ELSE 0 END)
-            FROM read_parquet('{SF}/events.parquet') e
-            JOIN read_parquet('{SF}/customer.parquet') c
-              ON c.c_custkey = e.user_id
-            GROUP BY 1, 2"""
-    ).fetchall()
-    cells = defaultdict(lambda: [0, 0, 0, 0])  # t_n, c_n, t_pos, c_pos
-    for u, seg, pos in rows_ev:
-        t = int(hashlib.md5(f"trt:{u}".encode()).hexdigest()[0], 16) % 2
-        c = cells[seg]
-        if t:
-            c[0] += 1
-            c[2] += pos
-        else:
-            c[1] += 1
-            c[3] += pos
-    agg = [sum(c[i] for c in cells.values()) for i in range(4)]
-    agg_sign = _sign(agg[2] * agg[1] - agg[3] * agg[0])
-    strat_signs = {
-        seg: _sign(c[2] * c[1] - c[3] * c[0]) for seg, c in cells.items()
-    }
-    nz = [s for s in strat_signs.values() if s != 0]
-    paradox = agg_sign != 0 and bool(nz) and all(s * agg_sign == -1 for s in nz)
-    got = {r["seg"]: r for r in entry.queries()["q_simpson_paradox"](spark, SF).collect()}
-    assert set(got) == set(cells)
-    for seg, c in cells.items():
-        r = got[seg]
-        assert (r["t_n"], r["c_n"], r["t_pos"], r["c_pos"]) == tuple(c)
-        assert r["stratum_sign"] == strat_signs[seg]
-        assert (r["agg_t_n"], r["agg_c_n"]) == (agg[0], agg[1])
-        assert r["agg_sign"] == agg_sign
-        assert r["simpson_flag"] == paradox
-    # ledger non-vacuity: conversions exist in both arms somewhere
-    assert agg[2] > 0 and agg[3] > 0
 
 
 def test_trimmed_mean_matches_replica(spark):

@@ -122,60 +122,6 @@ def test_repetition_random_corpus_matches_replica(spark):
         assert got[i] == want, (i, t, got[i], want)
 
 
-def _py_bpe(word_counts: dict[str, int], k: int):
-    """Reference sequential BPE (leftmost-first greedy merges)."""
-    vocab = {w: list(w) for w in word_counts}
-    merges = []
-    for _ in range(k):
-        counts: Counter = Counter()
-        for w, c in word_counts.items():
-            s = vocab[w]
-            for i in range(len(s) - 1):
-                counts[(s[i], s[i + 1])] += c
-        if not counts:
-            break
-        (a, b), n = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
-        if n < 2:
-            break
-        merges.append((a, b, n))
-        for w, s in vocab.items():
-            out, i = [], 0
-            while i < len(s):
-                if i + 1 < len(s) and s[i] == a and s[i + 1] == b:
-                    out.append(a + b)
-                    i += 2
-                else:
-                    out.append(s[i])
-                    i += 1
-            vocab[w] = out
-    return merges, vocab
-
-
-def test_bpe_merges_match_sequential_reference(spark):
-    """The distributed BPE (vocabulary-table rounds, JVM-fold merge
-    application) must learn the same merges in the same order and produce
-    the same final segmentation as the sequential reference — including
-    overlap cases (aaa), repeated letters, and multi-round remerges."""
-    from cliner_spark.lm import bpe_merges, word_freqs
-
-    texts = [
-        "the theater the the loow low lower lowest",
-        "aaa aaa abab low low banana banana theme",
-        "newer newest wider widest the theme",
-    ]
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id bigint, text string"
-    )
-    wf = word_freqs(docs)
-    wc = {r["word"]: r["n"] for r in wf.collect()}
-
-    want_merges, want_vocab = _py_bpe(wc, k=8)
-    got_merges, final = bpe_merges(wf, k=8)
-    assert got_merges == want_merges and len(got_merges) == 8
-    got_vocab = {r["word"]: list(r["syms"]) for r in final.collect()}
-    assert got_vocab == want_vocab
-
-
 def test_heavy_hitters_matches_exact_on_random_skewed_streams(spark):
     """Misra-Gries superset guarantee + exact recount: on random Zipf-ish
     token streams (heavy tokens deliberately arriving LATE and spread thin

@@ -23,9 +23,7 @@ import sys
 import duckdb
 import pandas as pd
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+TABLES = ("events", "documents", "embeddings")
 
 
 def normalize(df: pd.DataFrame) -> list[tuple]:

@@ -21,6 +21,8 @@ pattern) instance count, and the lint fails if a plan ever contains MORE
 instances than frozen — so a whitelisted query cannot silently grow new
 flagged operators as it evolves. Regenerate with --update-counts after an
 intentional change (the diff of the JSON is the review surface).
+A whitelist or count entry naming a query that is not registered fails the
+lint too, so neither can go stale when a query is deleted.
 
 Usage: python tools/plan_lint.py [query ...]       exit 1 if any unexplained
        python tools/plan_lint.py --update-counts   refreeze instance counts
@@ -96,9 +98,7 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
         ("BroadcastNestedLoopJoin", "1-row corpus-horizon max-day carry")
     ],
     "q_dsir_weights": [("BroadcastNestedLoopJoin", "1-row vocab carries (x2)")],
-    "q_gap_fill": [("BroadcastNestedLoopJoin", "hour-spine x group dim (both tiny)")],
     "q_mix_weights": [("BroadcastNestedLoopJoin", "1-row total carry")],
-    "q_embedding_ivf_seeded": [("BroadcastNestedLoopJoin", "16-row centroid table probe")],
     "q_embedding_ivf_topk": [
         ("BroadcastNestedLoopJoin",
          "16-row centroid probe + the exact-baseline broadcast query spine "
@@ -121,9 +121,6 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
         ("CartesianProduct", "1-row x 1-row audit-count carry"),
     ],
     "q_scd2_pit": [("BroadcastNestedLoopJoin", "2-row release-version spine cross")],
-    "q_kmv_join_estimate": [
-        ("BroadcastNestedLoopJoin", "1-row sketch-stat carries (ua/ub/ug/overlap/exact audits)")
-    ],
     "q_rrf_fusion": [
         (
             "BroadcastNestedLoopJoin",
@@ -142,9 +139,6 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
     "q_concept_drift": [("BroadcastNestedLoopJoin", "1-row t_a/t_b totals carry")],
     "q_extractive_summary": [("BroadcastNestedLoopJoin", "1-row corpus-size carry")],
     "q_curriculum_phases": [("BroadcastNestedLoopJoin", "1-row tertile-bounds carry")],
-    "q_ivf_cell_profile": [
-        ("BroadcastNestedLoopJoin", "1-row corpus-total carry into the share ratio")
-    ],
     "q_perplexity_buckets": [
         ("BroadcastNestedLoopJoin",
          "1-row vocab carry (LM) + 1-row total/tertile-bounds carries")
@@ -160,13 +154,6 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
          "theta probe against the broadcast gazetteer DIMENSION (fuzzy "
          "band has no equi key; dimension-sized build side)")
     ],
-    "q_embedding_ann_recall": [
-        ("CartesianProduct",
-         "<=20-row query spine x 2-row method literal (bookkeeping base)")
-    ],
-    "q_tpch_q11": [("BroadcastNestedLoopJoin", "1-row grand-total carry into the HAVING predicate")],
-    "q_tpch_q15": [("BroadcastNestedLoopJoin", "1-row max-revenue carry (top-supplier tie filter)")],
-    "q_tpch_q22": [("BroadcastNestedLoopJoin", "1-row sum/count balance-stats carry")],
     "q_rocchio_prf": [
         ("BroadcastNestedLoopJoin",
          "1-row n_docs/avgdl carry x2 passes + 1-row N carry into the "
@@ -348,11 +335,6 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
          "join) + 1-row coalition-value wide carry onto the 3-row "
          "channel spine — all dimension-scale by construction")
     ],
-    "q_kanonymity_audit": [
-        ("BroadcastNestedLoopJoin",
-         "3-row k spine x the quasi-identifier group dimension + 1-row "
-         "total/min-l carries — audit collapses map-side to 3 rows")
-    ],
     "q_binary_segmentation": [
         ("BroadcastNestedLoopJoin",
          "1-row level-1 split carry onto the |days| frame — the "
@@ -444,27 +426,11 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
          "5-row broadcast width spine x the doc-length dimension — the "
          "zero-filled rate denominator, collapsed map-side to 5 rows")
     ],
-    "q_did_estimator": [
-        ("BroadcastNestedLoopJoin",
-         "2-row broadcast {pre,post} period spine x the user dimension — "
-         "the zero-filled panel; cells collapse map-side to 4 rows")
-    ],
     "q_prefix_cache": [
         ("BroadcastNestedLoopJoin",
          "4-row broadcast depth spine x corpus with a >= length predicate "
          "— a bounded fanout collapsed map-side by the (depth, prefix) "
          "groupBy")
-    ],
-    "q_merkle_diff": [
-        ("BroadcastNestedLoopJoin",
-         "2x256-row broadcast (side, leaf) spine crossJoin + a 1-row "
-         "delta-counts carry — the zero-filled leaf frame is fixed-size "
-         "regardless of table rows")
-    ],
-    "q_rendezvous_hashing": [
-        ("BroadcastNestedLoopJoin",
-         "10-row broadcast node spine x keys — the HRW weight fanout, "
-         "collapsed map-side by the per-key max_by groupBy")
     ],
     "q_kruskal_wallis": [
         ("BroadcastNestedLoopJoin",
@@ -477,20 +443,10 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
          "1-row n/S and A0/A1 carries — checkpoint-frame sized by "
          "construction")
     ],
-    "q_power_analysis": [
-        ("BroadcastNestedLoopJoin",
-         "3-row broadcast MDE spine x the 5-row segment rollup — a "
-         "15-cell planning grid")
-    ],
     "q_group_sequential": [
         ("BroadcastNestedLoopJoin",
          "5-row broadcast look spine x events with a <= predicate — the "
          "cumulative-look fanout, collapsed map-side to 5 rows")
-    ],
-    "q_cohens_effects": [
-        ("BroadcastNestedLoopJoin",
-         "1-row global sufficient-stats carry onto the 5-row segment "
-         "ledger")
     ],
     "q_wand_pruning": [
         ("BroadcastNestedLoopJoin",
@@ -526,15 +482,6 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
     "q_checkpoint_shards": [
         ("BroadcastNestedLoopJoin",
          "1-row total-bytes carry onto the 16-row shard ledger")
-    ],
-    "q_skyline": [
-        ("BroadcastNestedLoopJoin",
-         "1-row part-count carry onto the front-sized skyline output")
-    ],
-    "q_critical_path": [
-        ("BroadcastNestedLoopJoin",
-         "64-task synthetic DAG crossJoin at build time (metadata-sized, "
-         "layer-filtered) + 1-row makespan carry")
     ],
     "q_cramer_von_mises": [
         ("BroadcastNestedLoopJoin",
@@ -591,11 +538,6 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
          "1-row midpoint-day + period-totals carries onto the per-type "
          "2x2 ledger")
     ],
-    "q_ring_reliability": [
-        ("BroadcastNestedLoopJoin",
-         "4-row broadcast failure-rate spine x the synthetic 256-node "
-         "ring — a 1024-row build frame")
-    ],
     "q_router_cascade": [
         ("BroadcastNestedLoopJoin",
          "3-row broadcast tau spine x requests, collapsed map-side to "
@@ -632,12 +574,6 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
         ("BroadcastNestedLoopJoin",
          "1-row total + minimal-moves carries onto the 16-shard plan")
     ],
-    "q_cascade_failure": [
-        ("BroadcastNestedLoopJoin",
-         "64-task synthetic DAG crossJoin at build time (metadata-sized, "
-         "layer-filtered) + 1-row blast-radius carry — same build shape "
-         "as q_critical_path")
-    ],
     "q_read_your_writes": [
         ("BroadcastNestedLoopJoin",
          "3-row broadcast replica-lag spine x the per-user gap frame, "
@@ -670,7 +606,6 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
 ALLOWED_GLOBAL_WINDOW: dict[str, str] = {
     "q_ams_f2": "median rank over the 16-row estimator ledger",
     "q_anova_sources": "grand-mean/rank windows on the |sources| rollup",
-    "q_benford_audit": "OVER() total on the 9-row leading-digit ledger",
     "q_bh_fdr": "BH step-up rank + running max over the m-row (|sources|) "
                 "p-value ledger",
     "q_binary_segmentation": "all windows run on the |days| daily-rollup "
@@ -680,15 +615,10 @@ ALLOWED_GLOBAL_WINDOW: dict[str, str] = {
                      "(q_wand_pruning) is the index-side scale path",
     "q_borda_condorcet": "all ranks/totals on the m=20-row source dimension "
                          "(pairwise frame m^2=400)",
-    "q_bottomk_merge": "shard-merge rank over the 128-row (8 shards x k=16) "
-                       "sketch union; direct pass ranks the same k-bounded "
-                       "frame",
     "q_checkpoint_shards": "size rank + spread window over the 16-row shard "
                            "ledger",
     "q_chisq_independence": "OVER() totals on the |sources| x |langs| "
                             "contingency grid",
-    "q_cohens_effects": "rank windows on the (segment, value) value-domain "
-                        "frame",
     "q_compaction_plan": "cumulative-sum packing over the FILE LISTING "
                          "(metadata-sized: one row per data file, the "
                          "planner's own input)",
@@ -706,7 +636,6 @@ ALLOWED_GLOBAL_WINDOW: dict[str, str] = {
     "q_cusum_changepoint": "CUSUM/rank windows on the |days| daily rollup",
     "q_degree_ccdf": "CCDF cumulative window over the |distinct degrees| "
                      "spectrum",
-    "q_did_estimator": "window over the 4-row (group x period) panel",
     "q_dow_seasonality": "rank over the 7-row weekday ledger",
     "q_dup_discovery": "rank/cum windows over the <=12-row checkpoint "
                        "spine",
@@ -715,7 +644,6 @@ ALLOWED_GLOBAL_WINDOW: dict[str, str] = {
     "q_epoch_shuffle": "global row_number IS the demonstrated operator "
                        "(epoch shuffle): gate-SF demonstration by design; "
                        "docstring documents the sharded production loader",
-    "q_fs_linkage": "OVER() total on the <=8-row agreement-pattern grid",
     "q_funnel_conversion": "lag/max windows on the 3-row funnel-step frame",
     "q_gains_chart": "cumulative gain over the per-user rollup (user "
                      "dimension); documented production swap to broadcast "
@@ -781,9 +709,6 @@ ALLOWED_GLOBAL_WINDOW: dict[str, str] = {
                          "(shuffle-quality audit) — gate-SF demonstration; "
                          "docstring documents the per-shard production "
                          "form",
-    "q_simpson_paradox": "sign windows on the segment-dimension ledger",
-    "q_skyline": "ONE dominance sort window (dist_dense_rank shape); "
-                 "output front-sized",
     "q_successive_halving": "elimination ranks on the 16-row config frame",
     "q_touch_attribution": "final rank on the 4-row channel ledger",
     "q_vocab_coverage": "row_number over the VOCAB table (dimension-sized; "
@@ -815,6 +740,12 @@ SUBSTRING_PATTERNS = (
 )
 
 
+def stale_entries(registered, frozen: dict[str, dict[str, int]]) -> list[str]:
+    """Whitelist or frozen-count entries that name an unregistered query."""
+    named = set(ALLOWED) | set(ALLOWED_GLOBAL_WINDOW) | set(frozen)
+    return sorted(named - set(registered))
+
+
 def pattern_counts(plan: str) -> dict[str, int]:
     out = {pat: plan.count(pat) for pat in SUBSTRING_PATTERNS}
     out["GlobalWindow"] = count_global_windows(plan)
@@ -838,7 +769,10 @@ def main() -> int:
     if os.path.exists(COUNTS_PATH):
         with open(COUNTS_PATH) as f:
             frozen = json.load(f)
-    bad = 0
+    stale = stale_entries(qs, frozen)
+    for name in stale:
+        print(f"{name}: STALE whitelist/count entry (query not registered)")
+    bad = len(stale)
     observed_all: dict[str, dict[str, int]] = {}
     for name in wanted:
         try:
@@ -889,7 +823,7 @@ def main() -> int:
         # freeze counts ONLY for whitelisted (query, pattern) pairs — an
         # unexplained pattern must never become quietly acceptable via the
         # counts file.
-        new_frozen = dict(frozen)
+        new_frozen = {n: c for n, c in frozen.items() if n in qs}
         for name, observed in observed_all.items():
             allowed_pats = dict(ALLOWED.get(name, []))
             if name in ALLOWED_GLOBAL_WINDOW:
